@@ -64,13 +64,6 @@ def main(argv=None) -> int:
             fail_after_groups=args.fail_after_groups,
         )
         wall = time.time() - t0
-        n_turns = sum(
-            m["status_counts"].get("accepted", 0)
-            + m["status_counts"].get("corrected", 0)
-            + m["status_counts"].get("discarded", 0)
-            + m["status_counts"].get("dropped_short", 0)
-            for m in summary["ledger"].values()
-        )
         print(
             json.dumps(
                 {
@@ -81,7 +74,10 @@ def main(argv=None) -> int:
                         m["n_surviving"] for m in summary["ledger"].values()
                     ),
                     "wall_sec": round(wall, 2),
-                    "approx_turns": n_turns,
+                    "blocks": sum(
+                        sum(m["status_counts"].values())
+                        for m in summary["ledger"].values()
+                    ),
                 }
             )
         )

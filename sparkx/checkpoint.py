@@ -9,12 +9,15 @@ implemented format-agnostically:
 * Work is split into ``n_groups`` **conv-bucket groups**
   (``pmod(xxhash64(conv_id), n_groups)``) — each group is an independent,
   internally-parallel slice of the input (all cores busy within a group).
-* Each group commits atomically: data written to
-  ``<out>/extracted/commit_group=<g>/`` then a manifest JSON (row counts,
-  files, run lineage) is renamed into ``<out>/_ledger/group_<g>.json``.
-  The rename is the snapshot commit point.
+* Each group commits through :func:`sparkx.pipeline.commit_slice`, the one
+  commit function (``run_extraction`` is its single-slice case): survivors
+  overwrite ``<out>/extracted/commit_group=<g>/`` and the metrics sidecar
+  overwrites ``<out>/metrics/commit_group=<g>/``; then a manifest JSON
+  (status counts, run lineage) is renamed into
+  ``<out>/_ledger/group_<g>.json``.  The rename is the snapshot commit point.
 * Resume = skip groups whose manifest exists; re-running a half-written
-  group overwrites it (idempotent: deterministic ``chunk_id`` = sha2 of
+  group overwrites both of its slices, so survivors and metrics are each
+  committed exactly once (deterministic ``chunk_id`` = sha2 of
   ``conv_id|turn_idx|type|idx``, so re-extraction produces identical rows).
 
 The public API is identical whether the backing store is this parquet ledger
@@ -32,7 +35,9 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from sparkx.pipeline import extract_blocks, extraction_metrics, surviving
+from sparkx.pipeline import commit_slice, extract_blocks
+from sparkx.schemas import SURVIVING_STATUSES
+from sparkx.table_sink import DEFAULT_SINK
 
 
 class SimulatedFailure(RuntimeError):
@@ -82,11 +87,9 @@ def run_resumable(
     uncommitted groups re-run.  Returns summary incl. per-group manifests.
 
     ``sink`` (sparkx.table_sink.TableSink, default ParquetDirSink) is the
-    storage seam for the two data writes (group slice overwrite, metrics
-    append); swap in IcebergTableSink to make each group commit an Iceberg
+    storage seam for the group's two slice overwrites (survivors, metrics);
+    swap in IcebergTableSink to make each group commit an Iceberg
     snapshot — the JSON manifest then merely mirrors snapshot metadata."""
-    from sparkx.table_sink import DEFAULT_SINK
-
     sink = sink or DEFAULT_SINK
     run_id = run_id or f"run_{int(time.time())}"
     done = completed_groups(out_path)
@@ -124,22 +127,7 @@ def run_resumable(
             slice_df, mode=mode, validate=validate, run_id=run_id,
             src_snapshot_id=f"group_{g}", n_buckets=n_buckets,
         )
-        blocks.persist()
-        try:
-            data_dir = f"{out_path}/extracted/commit_group={g}"
-            sink.overwrite_slice(surviving(blocks), data_dir)
-            sink.append(
-                extraction_metrics(blocks, run_id).withColumn(
-                    "detail", F.concat_ws("|", F.lit(f"group={g}"), "detail")
-                ),
-                f"{out_path}/metrics",
-            )
-            status_counts = {
-                r["status"]: r["n"]
-                for r in blocks.groupBy("status").agg(F.count("*").alias("n")).collect()
-            }
-        finally:
-            blocks.unpersist()
+        status_counts = commit_slice(blocks, out_path, f"commit_group={g}", run_id, sink)
         _commit_manifest(
             out_path,
             {
@@ -152,7 +140,7 @@ def run_resumable(
                 "n_buckets": n_buckets,
                 "status_counts": status_counts,
                 "n_surviving": sum(
-                    v for k, v in status_counts.items() if k in ("accepted", "corrected")
+                    v for k, v in status_counts.items() if k in SURVIVING_STATUSES
                 ),
             },
         )

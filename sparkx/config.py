@@ -4,8 +4,7 @@ Same contract as the reference's ``ConfigLoader``
 (reference ``src/core/config.py:26-151``): fixed defaults dict, recursive
 deep-merge of a user ``settings.json``, dot-notation ``get``.  The keys the
 engine consumes keep the reference's names (``pipeline.max_context_chunks=8``,
-``pipeline.chunk_size=800``, ``agents.confidence_threshold=0.5``) plus the
-Spark-native knobs that replace the model registry.
+``pipeline.chunk_size=800``, ``agents.confidence_threshold=0.5``).
 """
 
 from __future__ import annotations
@@ -23,12 +22,6 @@ _DEFAULTS: dict[str, Any] = {
     "agents": {
         "confidence_threshold": 0.5,  # retry gate, base.py:42
         "accept_floor": 0.25,  # pipeline.py:292
-    },
-    "spark": {
-        "n_buckets": 32,
-        "checkpoint_groups": 8,
-        "arrow_batch_rows": 4096,
-        "salt_repartition": True,
     },
     "truncation": {  # the P5 family, each constant named (SURVEY §2.2)
         "structured_text": 2000,  # crewai_pipeline.py:155

@@ -27,11 +27,12 @@ import functools
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from sparkx.kernels.extract import OUTPUT_COLUMNS, extract_batch
-from sparkx.schemas import EXTRACTED, SURVIVING_STATUSES
+from sparkx.schemas import DROP_STATUSES, EXTRACTED, SURVIVING_STATUSES
+from sparkx.table_sink import DEFAULT_SINK
 
 # kernel output schema = EXTRACTED minus chunk_id (added natively afterwards)
 _KERNEL_SCHEMA = "".join(
@@ -568,6 +569,35 @@ def extraction_metrics(blocks: DataFrame, run_id: str) -> DataFrame:
     return counts.unionByName(retries).unionByName(scores)
 
 
+def commit_slice(
+    blocks: DataFrame, out_path: str, slice_name: str, run_id: str, sink
+) -> dict:
+    """Commit one slice of extracted blocks and return its block counts by
+    status.  Survivors go to ``<out>/extracted/<slice>`` and the metrics
+    sidecar to ``<out>/metrics/<slice>``, each through
+    ``sink.overwrite_slice``, so redoing a slice replaces both instead of
+    adding to them.  The counts come from an ``Observation`` on the
+    survivors write: two write actions, no collect."""
+    counts = Observation()
+    blocks.persist()
+    try:
+        observed = blocks.observe(
+            counts,
+            *[F.count_if(F.col("status") == s).alias(s)
+              for s in SURVIVING_STATUSES + DROP_STATUSES],
+        )
+        sink.overwrite_slice(
+            surviving(observed), f"{out_path}/extracted/{slice_name}".rstrip("/")
+        )
+        sink.overwrite_slice(
+            extraction_metrics(blocks, run_id),
+            f"{out_path}/metrics/{slice_name}".rstrip("/"),
+        )
+    finally:
+        blocks.unpersist()
+    return {s: n for s, n in counts.get.items() if n}
+
+
 def run_extraction(
     spark: SparkSession,
     transcripts: DataFrame,
@@ -578,24 +608,16 @@ def run_extraction(
     src_snapshot_id: str = "",
     n_buckets: int = DEFAULT_BUCKETS,
 ) -> dict:
-    """One-shot (non-resumable) run: write survivors + metrics, return totals.
-    For checkpointed runs use sparkx.checkpoint.run_resumable."""
+    """One-shot (non-resumable) run, returning block totals by status.  It
+    commits through the one commit function, :func:`commit_slice`, with an
+    empty slice name: survivors land unpartitioned in ``<out>/extracted``
+    (``conv_bucket`` stays a column), the metrics in ``<out>/metrics``, and a
+    re-run into the same ``out_path`` replaces both.  For checkpointed runs
+    use sparkx.checkpoint.run_resumable, which commits each group through the
+    same function to ``extracted/commit_group=<g>/`` and
+    ``metrics/commit_group=<g>/``."""
     blocks = extract_blocks(
         transcripts, mode=mode, validate=validate, run_id=run_id,
         src_snapshot_id=src_snapshot_id, n_buckets=n_buckets,
     )
-    blocks.persist()
-    try:
-        surviving(blocks).write.mode("overwrite").partitionBy("conv_bucket").parquet(
-            f"{out_path}/extracted"
-        )
-        extraction_metrics(blocks, run_id).write.mode("append").parquet(
-            f"{out_path}/metrics"
-        )
-        totals = {
-            r["status"]: r["n"]
-            for r in blocks.groupBy("status").agg(F.count("*").alias("n")).collect()
-        }
-    finally:
-        blocks.unpersist()
-    return totals
+    return commit_slice(blocks, out_path, "", run_id, DEFAULT_SINK)

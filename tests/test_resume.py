@@ -4,21 +4,76 @@
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import functions as F
 
+from sparkx import oracle as O
 from sparkx.checkpoint import (
     SimulatedFailure,
     completed_groups,
     read_extracted,
     run_resumable,
 )
+from sparkx.pipeline import run_extraction
 from sparkx.schemas import TRANSCRIPTS
 from sparkx.synth import synth_pandas
+from sparkx.table_sink import ParquetDirSink
+
+
+def _turns(seed):
+    return synth_pandas(n_convs=24, turns_per_conv=6, seed=seed)
 
 
 def _transcripts(spark, seed=37):
-    return spark.createDataFrame(
-        synth_pandas(n_convs=24, turns_per_conv=6, seed=seed), schema=TRANSCRIPTS
+    return spark.createDataFrame(_turns(seed), schema=TRANSCRIPTS)
+
+
+def _oracle_totals(seed):
+    want = O.metrics_totals(O.run_oracle(_turns(seed).to_dict("records")))
+    return {s: n for s, n in want.items()
+            if n and s not in ("n_candidate_blocks", "retried")}
+
+
+def _sidecar_totals(spark, out):
+    """Block totals by status, summed over the whole ``metrics/`` sidecar."""
+    rows = (
+        spark.read.parquet(f"{out}/metrics")
+        .filter(F.col("metric").startswith("blocks_"))
+        .groupBy("metric")
+        .agg(F.sum("value").alias("n"))
+        .collect()
     )
+    return {r.metric.removeprefix("blocks_"): int(r.n) for r in rows if r.n}
+
+
+def _ledger_totals(out):
+    totals = {}
+    for m in completed_groups(out).values():
+        for s, n in m["status_counts"].items():
+            totals[s] = totals.get(s, 0) + n
+    return totals
+
+
+class _FailingSink(ParquetDirSink):
+    """Dies at the ``nth`` data write of a run, before or after doing it."""
+
+    def __init__(self, nth, after):
+        self.nth, self.after, self.calls = nth, after, 0
+
+    def _write(self, write, df, table):
+        self.calls += 1
+        if self.calls == self.nth and not self.after:
+            raise SimulatedFailure(f"killed before write {self.nth}")
+        write(df, table)
+        if self.calls == self.nth and self.after:
+            raise SimulatedFailure(f"killed after write {self.nth}")
+
+    def overwrite_slice(self, df, table):
+        self._write(super().overwrite_slice, df, table)
+
+    # counted too, so a commit that appended its metrics would die at the
+    # same step
+    def append(self, df, table):
+        self._write(super().append, df, table)
 
 
 def test_kill_and_resume_no_duplicates(spark, tmp_path):
@@ -96,3 +151,47 @@ def test_lineage_columns_present(spark, tmp_path):
     assert all(r.run_id == "lineage_run" for r in rows)
     assert all(r.src_snapshot_id.startswith("group_") for r in rows)
     assert all(r.partition_id is not None and r.conv_bucket is not None for r in rows)
+
+
+# Each group writes its survivors, then its metrics, then renames its
+# manifest.  Kill the second of two groups at each step.
+@pytest.mark.parametrize(
+    "nth, after",
+    [(3, False), (3, True), (4, True)],
+    ids=["before_survivors_write", "after_survivors_write",
+         "after_metrics_write_before_manifest_rename"],
+)
+def test_kill_at_each_commit_step_commits_metrics_once(spark, tmp_path, nth, after):
+    seed = 53
+    df = _transcripts(spark, seed=seed)
+    out = str(tmp_path / "killed")
+    with pytest.raises(SimulatedFailure):
+        run_resumable(spark, df, out, n_groups=2, run_id="try1",
+                      sink=_FailingSink(nth, after))
+    assert len(completed_groups(out)) == 1
+
+    summary = run_resumable(spark, df, out, n_groups=2, run_id="try2")
+    assert summary["groups_executed_this_run"] == 1
+
+    want = _oracle_totals(seed)
+    assert _ledger_totals(out) == want
+    assert _sidecar_totals(spark, out) == want
+    n_surviving = sum(m["n_surviving"] for m in summary["ledger"].values())
+    assert read_extracted(spark, out).count() == n_surviving
+
+
+def test_run_extraction_commits_once(spark, tmp_path):
+    seed = 59
+    df = _transcripts(spark, seed=seed)
+    out = str(tmp_path / "oneshot")
+    totals = run_extraction(spark, df, out, run_id="once")
+    assert totals == _oracle_totals(seed)
+    assert _sidecar_totals(spark, out) == totals
+
+    # a re-run into the same out_path replaces the sidecar, never adds to it
+    assert run_extraction(spark, df, out, run_id="again") == totals
+    assert _sidecar_totals(spark, out) == totals
+
+    got = spark.read.parquet(f"{out}/extracted")
+    assert "conv_bucket" in got.columns
+    assert got.count() == totals.get("accepted", 0) + totals.get("corrected", 0)
