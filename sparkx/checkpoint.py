@@ -61,14 +61,13 @@ def completed_groups(out_path: str) -> dict[int, dict]:
     return done
 
 
-def _commit_manifest(out_path: str, manifest: dict) -> None:
+def _commit_manifest(out_path: str, name: str, manifest: dict) -> None:
     led = _ledger_dir(out_path)
     os.makedirs(led, exist_ok=True)
     tmp = os.path.join(led, f".tmp_{uuid.uuid4().hex}")
-    final = os.path.join(led, f"group_{manifest['group']}.json")
     with open(tmp, "w") as f:
         json.dump(manifest, f, indent=1)
-    os.replace(tmp, final)  # atomic — this IS the snapshot commit
+    os.replace(tmp, os.path.join(led, name))  # atomic — this IS the snapshot commit
 
 
 def run_resumable(
@@ -130,6 +129,7 @@ def run_resumable(
         status_counts = commit_slice(blocks, out_path, f"commit_group={g}", run_id, sink)
         _commit_manifest(
             out_path,
+            f"group_{g}.json",
             {
                 "group": g,
                 "run_id": run_id,

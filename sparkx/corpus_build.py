@@ -252,8 +252,10 @@ def build_corpus(
     order dedup → quality → sample).  Two passes over the cached frame:
     the ≤8-row flag-combination rollup (from which the funnel dict is
     derived driver-side — no separate agg job) and the corpus write.
-    ``run_id`` defaults to a fresh unique id so appended metrics rows from
-    repeated runs into one out_path stay distinguishable.
+    The corpus and its funnel metrics (``<out>/metrics``) are both
+    overwritten, so a re-run into the same ``out_path`` replaces them
+    instead of adding to them.  ``run_id`` defaults to a fresh unique id and
+    is recorded on every metrics row.
     """
     import uuid
 
@@ -303,7 +305,7 @@ def build_corpus(
             "is_canonical boolean, passes_quality boolean, sampled boolean, "
             "n long, run_id string",
         )
-        metrics.write.mode("append").parquet(f"{out_path}/metrics")
+        metrics.write.mode("overwrite").parquet(f"{out_path}/metrics")
         return funnel
     finally:
         flagged.unpersist()

@@ -27,6 +27,12 @@ intra-kind ``block_idx``.
 Gated-out blocks are emitted with a ``status`` of ``dropped_*`` so the metrics
 sidecar can count drops in the same pass; lines consumed by a table region or
 figure never re-enter the text remainder.
+
+Every turn goes through this one line grammar; a prose turn is simply a turn
+whose every line lands in the text remainder.  Which turns reach the kernel at
+all is decided once, by the router in :func:`sparkx.pipeline.extract_blocks`:
+prose turns and the single-line structured shapes are built natively there,
+so inside the pipeline every kernel row contains a tab or ``FIG;mode=``.
 """
 
 from __future__ import annotations
@@ -41,10 +47,6 @@ MIN_FIGURE_DIM = 80  # parser.py:81-83
 FIG_RE = r"^FIG;mode=([A-Za-z0-9]+);w=(\d+);h=(\d+);caption=(.*)$"
 
 RANK_TABLE, RANK_FIGURE, RANK_TEXT = 0, 1, 2
-
-import os as _os
-
-FORCE_COMPLEX = _os.environ.get("SPARKX_FORCE_COMPLEX", "") == "1"
 
 # columns every block row carries (turn passthrough + block identity)
 _CARRY = ["conv_id", "turn_idx", "role", "tool", "ts"]
@@ -86,38 +88,7 @@ def parse_blocks(turns: pd.DataFrame) -> pd.DataFrame:
     t = turns.reset_index(drop=True)
     t["_tid"] = np.arange(len(t), dtype=np.int64)
 
-    # ── fast path: turns that cannot contain table/figure lines need no
-    #    line explode at all (their text remainder IS the whole text).
-    #    This is the hot path — most web/transcript turns are pure prose.
-    txt = t["text"].fillna("").astype(object)
-    if FORCE_COMPLEX:  # benchmarking hook: disable the prose fast path
-        complex_mask = pd.Series(True, index=t.index)
-    else:
-        complex_mask = txt.str.contains("\t", regex=False) | txt.str.contains(
-            "FIG;mode=", regex=False
-        )
-    simple = t.loc[~complex_mask, _CARRY + ["_tid"]].copy()
-    simple_txt = txt[~complex_mask]
-    if len(simple):
-        simple["chunk_type"] = "text"
-        simple["block_rank"] = RANK_TEXT
-        simple["block_idx"] = 0
-        simple["raw_content"] = simple_txt
-        simple["fig_mode"] = None
-        simple["fig_w"] = -1
-        simple["fig_h"] = -1
-        simple["fig_caption"] = None
-        simple["parse_status"] = np.where(
-            simple_txt.str.strip().str.len() >= MIN_TEXT_LEN, "", "dropped_short"
-        )
-        simple["header_line"] = None
-        simple["n_rows"] = -1
-    if not complex_mask.any():
-        return simple.drop(columns="_tid").reset_index(drop=True)[BLOCK_COLUMNS]
-
-    t = t.loc[complex_mask].reset_index(drop=True)
-
-    # ── explode to lines (complex turns only) ───────────────────────────
+    # ── explode to lines ────────────────────────────────────────────────
     lines = t["text"].fillna("").astype(object).str.split("\n")
     L = t[["_tid"]].copy()
     L["line"] = lines
@@ -143,11 +114,10 @@ def parse_blocks(turns: pd.DataFrame) -> pd.DataFrame:
     texts = _build_text_remainder(L, ~is_tab & ~is_fig, tids=t["_tid"].to_numpy())
 
     blocks = pd.concat([tables, figures, texts], ignore_index=True)
-    out = t[_CARRY + ["_tid"]].merge(blocks, on="_tid", how="inner")
-    if len(simple):
-        out = pd.concat([out, simple], ignore_index=True)
-    out = out.sort_values(["_tid", "block_rank", "block_idx"], kind="stable").drop(
-        columns="_tid"
+    out = (
+        t[_CARRY + ["_tid"]].merge(blocks, on="_tid", how="inner")
+        .sort_values(["_tid", "block_rank", "block_idx"], kind="stable")
+        .drop(columns="_tid")
     )
     return out.reset_index(drop=True)[BLOCK_COLUMNS]
 

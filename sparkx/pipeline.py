@@ -1,20 +1,27 @@
-"""The extraction pipeline: scan → salt-repartition → kernel → lineage → write.
+"""The extraction pipeline: scan → route → native ∪ kernel → lineage → commit.
 
 Spark restatement of the reference ingest path (``src/core/pipeline.py:208-330``,
-SURVEY.md §3.1) as ONE narrow chain:
+SURVEY.md §3.1).  Each turn is routed once, per row, into one of two
+branches of a single plan:
 
     transcripts scan
-      → repartition on xxhash64(conv_id, turn_idx)      (skew break: per-turn
-        extraction is embarrassingly parallel; a 10^6-turn conversation spreads
-        across all partitions instead of pinning one executor)
-      → mapInPandas(extract_batch)                       (parse + per-type
-        process + retry + Checkpoint-A in a single Arrow pass — the reference's
-        positional raw↔processed pairing (J1) becomes carried-through columns,
-        never a join, SURVEY §4.3)
+      ├─ native branch: prose turns (no tab, no ``FIG;mode=``) and the
+      │  single-line structured shapes the native claims cover
+      │    → _native_routed_blocks                   (pure Catalyst, codegen'd;
+      │      byte-identical to the kernel on every claimed row)
+      └─ kernel branch: every other tab- or ``FIG;mode=``-bearing turn
+           → repartition on xxhash64(conv_id, turn_idx)  (skew break, only
+             when the input is under-parallel; per-turn extraction is
+             embarrassingly parallel)
+           → mapInPandas(extract_batch)              (parse + per-type
+             process + retry + Checkpoint-A in a single Arrow pass — the
+             reference's positional raw↔processed pairing (J1) becomes
+             carried-through columns, never a join, SURVEY §4.3)
+      → union
       → chunk_id = sha2(conv_id|turn_idx|type|idx)       (native, codegen'd;
         replaces uuid4 models.py:126 for reproducibility)
       → lineage columns (run_id, src_snapshot_id, partition_id, conv_bucket)
-      → split: surviving rows → sink; all rows → metrics aggregation
+      → commit_slice: surviving rows → sink; all rows → metrics sidecar
 
 Stable turn ordering is intrinsic to ``(conv_id, turn_idx, ts, block_rank,
 block_idx)`` — reconstructed by :func:`ordered` at comparison time, never
@@ -29,22 +36,11 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
 from sparkx.kernels.extract import OUTPUT_COLUMNS, extract_batch
 from sparkx.schemas import DROP_STATUSES, EXTRACTED, SURVIVING_STATUSES
 from sparkx.table_sink import DEFAULT_SINK
-
-# kernel output schema = EXTRACTED minus chunk_id (added natively afterwards)
-_KERNEL_SCHEMA = "".join(
-    [
-        "conv_id string, turn_idx int, role string, tool string, ts timestamp, ",
-        "chunk_type string, block_rank int, block_idx int, raw_content string, ",
-        "structured_text string, intuition_summary string, key_concepts array<string>, ",
-        "confidence double, agent_notes string, retried boolean, ",
-        "is_valid boolean, issues array<string>, verdict_score double, ",
-        "validator_notes string, was_corrected boolean, status string",
-    ]
-)
 
 DEFAULT_BUCKETS = 32
 
@@ -65,9 +61,8 @@ def py_stripped_len(col) -> Column:
     return F.length(F.btrim(col, F.lit(PY_WS)))
 
 
-def _kernel(mode: str, validate: bool, emit_raw: bool,
+def _kernel(mode: str, validate: bool, cols: list[str],
             it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    cols = OUTPUT_COLUMNS if emit_raw else [c for c in OUTPUT_COLUMNS if c != "raw_content"]
     for pdf in it:
         out = extract_batch(pdf, mode=mode, validate=validate)
         yield out[cols]
@@ -391,7 +386,6 @@ def extract_blocks(
     n_buckets: int = DEFAULT_BUCKETS,
     salt_repartition: bool | str = "auto",
     emit_raw: bool = True,
-    native_simple_path: bool = True,
 ) -> DataFrame:
     """All candidate blocks (surviving + dropped) with lineage columns.
 
@@ -419,58 +413,48 @@ def extract_blocks(
       scan-shaped ones).
     * ``False``: never (callers that already repartitioned).
 
-    ``native_simple_path`` routes turns with no structured payload through
-    pure Catalyst expressions (see _native_simple_blocks); the pandas kernel
-    handles only table/figure-bearing turns.
+    Every turn is routed once, per row: prose turns and the single-line
+    structured shapes are built in pure Catalyst expressions
+    (:func:`_native_routed_blocks`); only the remaining tab- or
+    ``FIG;mode=``-bearing turns go through the salted ``mapInPandas`` kernel
+    branch.  The two branches are unioned before the lineage columns.
     """
-    spark = transcripts.sparkSession
     df = transcripts
-    n_partitions = n_partitions or spark.sparkContext.defaultParallelism * 2
+    n_partitions = n_partitions or df.sparkSession.sparkContext.defaultParallelism * 2
     if salt_repartition == "auto":
         # planning-only partition probe (no job): under-parallel input → salt
         salt_repartition = df.rdd.getNumPartitions() < n_partitions
 
-    def _salted(d: DataFrame) -> DataFrame:
+    # kernel output = EXTRACTED minus chunk_id (added natively below), all
+    # nullable as Arrow hands it back
+    cols = [c for c in OUTPUT_COLUMNS if emit_raw or c != "raw_content"]
+    schema = StructType([StructField(c, EXTRACTED[c].dataType, True) for c in cols])
+    # Only the kernel branch is salted: the Python workers need balanced
+    # partitions, while the native branch is pure codegen row-ops that cost
+    # the same under any layout — shuffling it would be pure waste (the
+    # native side stays scan→filter→explode-project with pushed-down
+    # StringContains filters).  Besides prose turns the native branch claims
+    # the single-line structured shapes (whole-text figure line; all-tab
+    # lines) — at transcript mixes this roughly halves the rows crossing
+    # the Python boundary (guide §4: the boundary itself is the cost).
+    claimed = _native_fig_pred(F.col("text")) | _native_tab_pred(F.col("text"))
+    complex_df = df.filter(F.expr(_COMPLEX_PRED) & ~claimed)
+    native_df = df.filter(
+        ~F.expr(f"coalesce({_COMPLEX_PRED}, false)")
+        | F.coalesce(claimed, F.lit(False))
+    )
+    if salt_repartition:
         # per-turn hash spread: breaks long-conversation skew (SURVEY §4.2);
         # safe because extraction is per-turn and ordering is intrinsic.
-        return d.repartition(n_partitions, F.xxhash64("conv_id", "turn_idx"))
-
-    schema = _KERNEL_SCHEMA if emit_raw else _KERNEL_SCHEMA.replace(
-        "raw_content string, ", ""
+        complex_df = complex_df.repartition(
+            n_partitions, F.xxhash64("conv_id", "turn_idx")
+        )
+    kernel_blocks = complex_df.mapInPandas(
+        functools.partial(_kernel, mode, validate, cols), schema=schema
     )
-    if native_simple_path:
-        # Only the kernel branch is salted: the Python workers need balanced
-        # partitions, while the native branch is pure codegen row-ops that
-        # cost the same under any layout — shuffling it would be pure waste
-        # (verified in the formatted plan: the native side stays
-        # scan→filter→explode-project with pushed-down StringContains
-        # filters).  r6: the native branch claims, besides prose turns, the
-        # single-line structured shapes (whole-text figure line; 1-row tab
-        # line) — at transcript mixes this roughly halves the rows crossing
-        # the Python boundary (guide §4: the boundary itself is the cost) —
-        # and routes all three shapes per-row in ONE scan.
-        claimed = _native_fig_pred(F.col("text")) | _native_tab_pred(
-            F.col("text")
-        )
-        complex_df = df.filter(F.expr(_COMPLEX_PRED) & ~claimed)
-        native_df = df.filter(
-            ~F.expr(f"coalesce({_COMPLEX_PRED}, false)")
-            | F.coalesce(claimed, F.lit(False))
-        )
-        if salt_repartition:
-            complex_df = _salted(complex_df)
-        kernel_blocks = complex_df.mapInPandas(
-            functools.partial(_kernel, mode, validate, emit_raw), schema=schema
-        )
-        blocks = kernel_blocks.unionByName(
-            _native_routed_blocks(native_df, mode, validate, emit_raw)
-        )
-    else:
-        if salt_repartition:
-            df = _salted(df)
-        blocks = df.mapInPandas(
-            functools.partial(_kernel, mode, validate, emit_raw), schema=schema
-        )
+    blocks = kernel_blocks.unionByName(
+        _native_routed_blocks(native_df, mode, validate, emit_raw)
+    )
     return (
         blocks.withColumn(
             "chunk_id",

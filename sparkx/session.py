@@ -40,10 +40,7 @@ def spread_narrow_input(df, min_parts: int = 8, cache_key: str | None = None):
 
     ``cache_key``: stable identity of the INPUT (e.g. the parquet path) —
     the partition probe costs a full plan build (df.rdd), so repeated
-    probes of the same table within a process are answered from a cache.
-    ``SPARKX_SPREAD=0`` disables the repair (A/B hook)."""
-    if os.environ.get("SPARKX_SPREAD", "1") == "0":
-        return df
+    probes of the same table within a process are answered from a cache."""
     sc = df.sparkSession.sparkContext
     target = sc.defaultParallelism
     floor = min(min_parts, target)

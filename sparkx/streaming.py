@@ -12,9 +12,10 @@ Design:
   on executors);
 * the identical ``extract_blocks`` transformation (mapInPandas is fully
   streaming-compatible: stateless per-batch);
-* ``foreachBatch`` sink → the same parquet layout + ledger manifest per
-  micro-batch, so batch and streaming outputs are indistinguishable to
-  readers;
+* ``foreachBatch`` sink → the batch job's commit function
+  (:func:`sparkx.pipeline.commit_slice`: survivors + metrics sidecar) and a
+  ledger manifest per micro-batch, so batch and streaming outputs are
+  indistinguishable to readers;
 * ``Trigger.AvailableNow`` for catch-up runs (used by tests), continuous
   trigger in production;
 * exactly-once: Spark's streaming checkpoint (offsets) + each micro-batch
@@ -33,8 +34,10 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
-from sparkx.pipeline import extract_blocks, surviving
-from sparkx.schemas import TRANSCRIPTS
+from sparkx.checkpoint import _commit_manifest
+from sparkx.pipeline import commit_slice, extract_blocks
+from sparkx.schemas import SURVIVING_STATUSES, TRANSCRIPTS
+from sparkx.table_sink import DEFAULT_SINK
 
 
 def stream_transcripts(spark: SparkSession, in_dir: str,
@@ -100,22 +103,18 @@ def _guard_stream_identity(out_path: str, checkpoint_dir: str, mode: str) -> Non
                 f"fresh out_path"
             )
         return
-    led = os.path.dirname(meta_path)
-    os.makedirs(led, exist_ok=True)
-    tmp = os.path.join(led, f".tmp_{uuid.uuid4().hex}")
-    with open(tmp, "w") as f:
-        json.dump(params, f)
-    os.replace(tmp, meta_path)
+    _commit_manifest(out_path, "stream_meta.json", params)
 
 
 def make_batch_sink(out_path: str, mode: str = "fastpath", run_id: str = "stream"):
-    """foreachBatch sink: extract → batch-keyed overwrite → ledger manifest.
+    """foreachBatch sink: extract → :func:`commit_slice` of the
+    ``stream/batch_id=<id>`` slice → ledger manifest.
 
     Replay-idempotent: a micro-batch retried after the data write but before
-    the streaming checkpoint commit rewrites its own ``batch_id=<id>``
-    directory (overwrite), so duplicates cannot accumulate — the failure
-    window parquet append could not cover.  Module-level so tests can drive a
-    replay directly."""
+    the streaming checkpoint commit overwrites its own survivors and metrics
+    slices, so duplicates cannot accumulate — the failure window parquet
+    append could not cover.  Module-level so tests can drive a replay
+    directly."""
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
         blocks = extract_blocks(
@@ -127,26 +126,21 @@ def make_batch_sink(out_path: str, mode: str = "fastpath", run_id: str = "stream
             # partition count bounded instead of 2×cores per batch
             salt_repartition=True,
         )
-        out = surviving(blocks).persist()  # one computation for write + count
-        try:
-            out.write.mode("overwrite").parquet(
-                f"{out_path}/extracted/stream/batch_id={batch_id}"
-            )
-            n = out.count()
-        finally:
-            out.unpersist()
-        led = f"{out_path}/_ledger"
-        os.makedirs(led, exist_ok=True)
-        manifest = {
-            "group": f"microbatch_{batch_id}",
-            "run_id": run_id,
-            "committed_at": time.time(),
-            "n_surviving": n,
-        }
-        tmp = os.path.join(led, f".tmp_{uuid.uuid4().hex}")
-        with open(tmp, "w") as f:
-            json.dump(manifest, f)
-        os.replace(tmp, os.path.join(led, f"stream_batch_{batch_id}.json"))
+        counts = commit_slice(
+            blocks, out_path, f"stream/batch_id={batch_id}", run_id, DEFAULT_SINK
+        )
+        _commit_manifest(
+            out_path,
+            f"stream_batch_{batch_id}.json",
+            {
+                "group": f"microbatch_{batch_id}",
+                "run_id": run_id,
+                "committed_at": time.time(),
+                "n_surviving": sum(
+                    v for k, v in counts.items() if k in SURVIVING_STATUSES
+                ),
+            },
+        )
 
     return _sink
 

@@ -1,9 +1,13 @@
 from __future__ import annotations
 
+import math
+
+import numpy as np
 import pandas as pd
 import pytest
 
 from sparkx import oracle as O
+from sparkx.kernels.extract import OUTPUT_COLUMNS, extract_batch
 
 
 @pytest.fixture(scope="session")
@@ -74,3 +78,31 @@ def assert_frames_equal(spark_pdf: pd.DataFrame, oracle_pdf: pd.DataFrame, cols=
             f"spark={av[bad[0]]!r} oracle={bv[bad[0]]!r} "
             f"key={a.iloc[bad[0]][SORT_KEYS].tolist()}"
         )
+
+
+def _plain(v):
+    """One cell as plain Python: arrays → lists, NaN/NA → None (the NULL both
+    Arrow and Spark store for them), numpy scalars → Python scalars.  NULL
+    and [] stay distinct."""
+    if isinstance(v, (list, np.ndarray)):
+        return [_plain(x) for x in v]
+    if v is None or v is pd.NA or (isinstance(v, float) and math.isnan(v)):
+        return None
+    return v.item() if isinstance(v, np.generic) else v
+
+
+def assert_routed_equals_kernel(routed: pd.DataFrame, turns: pd.DataFrame,
+                                mode: str, validate: bool = True,
+                                emit_raw: bool = True) -> None:
+    """The routed Spark plan's blocks equal ``extract_batch`` run in pandas
+    on the same turns, in every kernel output column but ``ts``.  chunk_id
+    is a pure function of the sort keys, so it is not rebuilt here."""
+    want = extract_batch(turns.copy(), mode=mode, validate=validate)
+    cols = [c for c in OUTPUT_COLUMNS if c != "ts" and (emit_raw or c != "raw_content")]
+
+    def plain(df):
+        return pd.DataFrame(
+            {c: pd.Series([_plain(v) for v in df[c]], dtype=object) for c in cols}
+        )
+
+    assert_frames_equal(plain(routed), plain(want), cols=cols)

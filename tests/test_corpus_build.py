@@ -52,6 +52,18 @@ def test_corpus_build_funnel(spark, tmp_path, transcripts_pdf):
     assert m.n.sum() == funnel["blocks_in"]
 
 
+def test_corpus_build_rerun_commits_metrics_once(spark, tmp_path, transcripts_pdf):
+    """A second build into the same out_path replaces the funnel metrics
+    instead of appending to them, like the corpus it describes."""
+    df = spark.createDataFrame(transcripts_pdf, schema=TRANSCRIPTS)
+    out = str(tmp_path / "rerun_out")
+    build_corpus(spark, df, out, min_tokens=5, min_quality=0.0, salt="r0")
+    funnel = build_corpus(spark, df, out, min_tokens=5, min_quality=0.0, salt="r0")
+    metrics = spark.read.parquet(f"{out}/metrics").toPandas()
+    assert metrics.n.sum() == funnel["blocks_in"]
+    assert len(spark.read.parquet(f"{out}/corpus").toPandas()) == funnel["after_sample"]
+
+
 def test_corpus_build_empty_funnel(spark, tmp_path):
     """Zero surviving text blocks must yield a zero-count funnel, not a
     TypeError from int(None) on NULL sums."""

@@ -1,7 +1,7 @@
 """Property fuzz for the NATIVE simple path: for arbitrary prose turns
 (newline/unicode-whitespace soup, no tabs, no FIG markers), routing through
 the pure-Catalyst branch must produce byte-identical output to the pandas
-kernel branch.  This is the generative version of the r1 ADVICE-high bug
+kernel (``extract_batch`` run directly on the same rows).  This is the generative version of the r1 ADVICE-high bug
 (F.trim vs Python str.strip at the 40-char gate), which a fixed fixture
 could not have caught."""
 
@@ -14,7 +14,7 @@ from hypothesis import strategies as st
 
 from sparkx.pipeline import extract_blocks
 from sparkx.schemas import TRANSCRIPTS
-from tests.conftest import assert_frames_equal
+from tests.conftest import assert_routed_equals_kernel
 
 _WS_HEAVY = st.lists(
     st.sampled_from(
@@ -57,11 +57,12 @@ def _frame(texts: list[str]) -> pd.DataFrame:
 @example(texts=["a" * 36 + "\n\n\n\n", " " * 5 + "b" * 40], mode="fastpath")
 @example(texts=["x" * 39 + "\x1c", " " * 45], mode="agentic")
 def test_native_path_equals_kernel_path(spark, texts, mode):
-    df = spark.createDataFrame(_frame(texts), schema=TRANSCRIPTS)
-    native = extract_blocks(df, mode=mode, native_simple_path=True).toPandas()
-    kernel = extract_blocks(df, mode=mode, native_simple_path=False).toPandas()
-    assert_frames_equal(native, kernel)
-    # all-prose input ⇒ every block rode the native branch; same row count
+    turns = _frame(texts)
+    native = extract_blocks(
+        spark.createDataFrame(turns, schema=TRANSCRIPTS), mode=mode
+    ).toPandas()
+    assert_routed_equals_kernel(native, turns, mode)
+    # all-prose input ⇒ every block rode the native branch, one per turn
     assert len(native) == len(texts)
 
 

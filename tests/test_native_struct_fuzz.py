@@ -1,10 +1,11 @@
 """Equivalence gate for the r6 native structured fast paths: single-line
-figure turns and single-line tab (1-row table) turns must produce
-byte-identical output whether routed through the pure-Catalyst claim or the
-pandas kernel (``native_simple_path=False``).  Adversarial shapes cover the
-claim-narrowing rules (Java vs Python regex line terminators, Unicode
-digits, overlong dims, captions with tabs) — rows the native path must NOT
-claim still compare equal because both routes fall back to the kernel."""
+figure turns and all-tab-line (table) turns must produce byte-identical
+output whether routed through the pure-Catalyst claim or run through the
+pandas kernel (``extract_batch`` called directly on the same rows).
+Adversarial shapes cover the claim-narrowing rules (Java vs Python regex
+line terminators, Unicode digits, overlong dims, captions with tabs) — rows
+the native path must NOT claim still compare equal because the router sends
+them to the kernel."""
 
 from __future__ import annotations
 
@@ -13,11 +14,10 @@ import pytest
 from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
-from pyspark.sql import functions as F
-
 from sparkx.pipeline import extract_blocks
 from sparkx.schemas import TRANSCRIPTS
-from tests.conftest import assert_frames_equal
+from sparkx.synth import synth_pandas
+from tests.conftest import assert_routed_equals_kernel
 
 _CAPTION = st.text(
     alphabet=st.characters(blacklist_categories=("Cs",)),
@@ -63,34 +63,12 @@ def _frame(texts: list[str]) -> pd.DataFrame:
 
 
 def _both_routes(spark, texts, mode, validate=True, emit_raw=True):
-    df = spark.createDataFrame(_frame(texts), schema=TRANSCRIPTS)
-    kw = dict(mode=mode, validate=validate, emit_raw=emit_raw,
-              salt_repartition=False)
-    def _prep(d):
-        # stringify array cols so NULL-vs-[] distinctions compare scalar;
-        # sentinel-coalesce nullable scalars (pandas NULL→NaN and NaN≠NaN)
-        return (
-            d.withColumn("issues_s", F.expr("cast(issues as string)"))
-            .withColumn("key_concepts_s", F.expr("cast(key_concepts as string)"))
-            .withColumn("is_valid", F.coalesce(F.col("is_valid").cast("string"), F.lit("<NULL>")))
-            .withColumn("verdict_score", F.coalesce(F.col("verdict_score").cast("string"), F.lit("<NULL>")))
-            .withColumn("validator_notes", F.coalesce(F.col("validator_notes"), F.lit("<NULL>")))
-        )
-
-    native = _prep(extract_blocks(df, native_simple_path=True, **kw))
-    kernel = _prep(extract_blocks(df, native_simple_path=False, **kw))
-    order = ["conv_id", "turn_idx", "chunk_type", "block_rank", "block_idx"]
-    cols = [
-        "chunk_id", "chunk_type", "structured_text", "intuition_summary",
-        "key_concepts_s", "confidence", "agent_notes", "retried", "is_valid",
-        "issues_s", "verdict_score", "validator_notes", "was_corrected",
-        "status",
-    ] + (["raw_content"] if emit_raw else [])
-    assert_frames_equal(
-        native.orderBy(*order).toPandas(),
-        kernel.orderBy(*order).toPandas(),
-        cols=cols,
+    turns = _frame(texts)
+    routed = extract_blocks(
+        spark.createDataFrame(turns, schema=TRANSCRIPTS), mode=mode,
+        validate=validate, emit_raw=emit_raw, salt_repartition=False,
     )
+    assert_routed_equals_kernel(routed.toPandas(), turns, mode, validate, emit_raw)
 
 
 # deterministic adversarial battery — the narrowing rules, one per row
@@ -166,8 +144,12 @@ def test_native_struct_fuzz(spark, texts, mode):
 def test_claimed_rows_have_no_python_stage(spark):
     """The claimed shapes must appear in the plan WITHOUT a MapInPandas on
     their branch — one MapInPandas total (the kernel branch survives for
-    unclaimed complex rows)."""
+    unclaimed complex rows) — and on a mixed input every row that node is fed
+    contains a tab or a ``FIG;mode=`` marker: the router alone decides which
+    turns cross into Python, so the kernel never sees a prose turn."""
     import re
+
+    from pyspark.sql import DataFrame
 
     df = spark.createDataFrame(
         _frame(["FIG;mode=RGB;w=100;h=200;caption=c", "a\tb"]),
@@ -178,3 +160,23 @@ def test_claimed_rows_have_no_python_stage(spark):
     )
     n_mip = len(re.findall(r"^\s*\(\d+\)\s+MapInPandas", plan, re.M))
     assert n_mip == 1, f"expected exactly 1 MapInPandas, got {n_mip}"
+
+    mixed = spark.createDataFrame(synth_pandas(n_convs=20, turns_per_conv=10, seed=5),
+                                  schema=TRANSCRIPTS)
+    stack = [extract_blocks(mixed)._jdf.queryExecution().optimizedPlan()]
+    mips = []
+    while stack:
+        node = stack.pop()
+        if node.nodeName() == "MapInPandas":
+            mips.append(node)
+        kids = node.children()
+        stack += [kids.apply(i) for i in range(kids.size())]
+    assert len(mips) == 1
+    kernel_in = DataFrame(
+        spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
+            spark._jsparkSession, mips[0].child()),
+        spark,
+    ).select("text").toPandas().text
+    assert 0 < len(kernel_in) < mixed.count()
+    assert (kernel_in.str.contains("\t", regex=False)
+            | kernel_in.str.contains("FIG;mode=", regex=False)).all()

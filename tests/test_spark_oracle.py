@@ -10,7 +10,12 @@ from sparkx import oracle as O
 from sparkx.pipeline import crossref_edges, extract_blocks, ordered, surviving, type_stats
 from sparkx.schemas import TRANSCRIPTS
 from sparkx.synth import synth_pandas
-from tests.conftest import COMPARE_COLS, assert_frames_equal, oracle_frame
+from tests.conftest import (
+    COMPARE_COLS,
+    assert_frames_equal,
+    assert_routed_equals_kernel,
+    oracle_frame,
+)
 
 
 def _spark_df(spark, pdf: pd.DataFrame):
@@ -104,7 +109,9 @@ def test_min_text_gate_python_strip_semantics(spark):
     """ADVICE r1 (high): the native simple path must strip the PYTHON
     whitespace set, not just spaces — 'a'*36 + '\\n\\n\\n\\n' is dropped_short
     on every route (kernel, native, oracle).  Boundary cases around 40 chars
-    with trailing \\n/\\r/unicode whitespace, on BOTH routings."""
+    with trailing \\n/\\r/unicode whitespace: the routed plan (these prose
+    turns ride its native branch) equals both the oracle and the pandas
+    kernel run directly on the same turns."""
     texts = [
         "a" * 36 + "\n\n\n\n",          # 40 raw, 36 stripped → dropped
         "b" * 40 + "\r\n",              # 40 stripped → accepted
@@ -126,11 +133,9 @@ def test_min_text_gate_python_strip_semantics(spark):
         }
     )
     want = oracle_frame(t, mode="fastpath", validate=True)
-    for native in (True, False):
-        got = extract_blocks(
-            _spark_df(spark, t), mode="fastpath", native_simple_path=native
-        ).toPandas()
-        assert_frames_equal(got, want)
+    got = extract_blocks(_spark_df(spark, t), mode="fastpath").toPandas()
+    assert_frames_equal(got, want)
+    assert_routed_equals_kernel(got, t, "fastpath")
     statuses = dict(zip(want.conv_id, want.status))
     assert statuses == {
         "ws0": "dropped_short", "ws1": "accepted", "ws2": "dropped_short",

@@ -57,7 +57,8 @@ def test_stream_matches_batch(spark, tmp_path):
 def test_sink_replay_is_idempotent(spark, tmp_path):
     """ADVICE r1: a micro-batch retried after the data write but before the
     streaming-checkpoint commit must NOT duplicate rows — the batch-keyed
-    overwrite sink rewrites its own directory on replay."""
+    overwrite sink rewrites its own survivors and metrics slices on replay."""
+    from sparkx.pipeline import extract_blocks
     from sparkx.schemas import TRANSCRIPTS
     from sparkx.streaming import make_batch_sink
 
@@ -73,6 +74,13 @@ def test_sink_replay_is_idempotent(spark, tmp_path):
     assert len(second) == len(first)
     assert second.chunk_id.is_unique
     assert sorted(second.chunk_id) == sorted(first.chunk_id)
+    # the metrics sidecar was committed once: its block totals by status are
+    # those of one extraction of the batch
+    m = spark.read.parquet(f"{out}/metrics/stream").toPandas()
+    blocks = m[m.metric.str.startswith("blocks_")]
+    got = blocks.groupby("metric").value.sum().to_dict()
+    want = extract_blocks(batch).groupBy("status").count().toPandas()
+    assert got == {f"blocks_{s}": float(n) for s, n in zip(want.status, want["count"])}
 
 
 def test_stream_restart_identity_guard(spark, tmp_path):
