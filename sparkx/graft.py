@@ -124,10 +124,3 @@ WITH transcripts AS (
   FROM documents
 )
 """
-
-# expected markdown for the table families (4, 5, 9), rebuilt in SQL
-TABLE_MD_SQL = (
-    "'| lang | source | chars |' || chr(10) || '| --- | --- | --- |' || chr(10)"
-    " || '| ' || lang || ' | ' || source || ' | ' || CAST(n_chars AS VARCHAR) || ' |'"
-    " || chr(10) || '|  | ' || CAST(doc_id AS VARCHAR) || ' |  |'"
-)

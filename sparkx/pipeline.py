@@ -22,6 +22,12 @@ branches of a single plan:
         replaces uuid4 models.py:126 for reproducibility)
       → lineage columns (run_id, src_snapshot_id, partition_id, conv_bucket)
       → commit_slice: surviving rows → sink; all rows → metrics sidecar
+        (one aggregate, then one generator emits each group's three rows)
+
+The router's predicates and the native branch's expression trees name only
+columns, never a DataFrame, so they are built once per JVM (the trees once
+per ``mode, validate, emit_raw``) and reused by every job, resume group and
+stream micro-batch; a call of :func:`extract_blocks` only applies them.
 
 Stable turn ordering is intrinsic to ``(conv_id, turn_idx, ts, block_rank,
 block_idx)`` — reconstructed by :func:`ordered` at comparison time, never
@@ -31,15 +37,17 @@ depended on physically (north_rule W1 invariant).
 from __future__ import annotations
 
 import functools
+import threading
 from collections.abc import Iterator
 
 import pandas as pd
+from pyspark import SparkContext
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
 from sparkx.kernels.extract import OUTPUT_COLUMNS, extract_batch
-from sparkx.schemas import DROP_STATUSES, EXTRACTED, SURVIVING_STATUSES
+from sparkx.schemas import DROP_STATUSES, EXTRACTED, LINEAGE_COLUMNS, SURVIVING_STATUSES
 from sparkx.table_sink import DEFAULT_SINK
 
 DEFAULT_BUCKETS = 32
@@ -139,6 +147,27 @@ def _native_tab_pred(col) -> Column:
     return pred
 
 
+def _once_per_jvm(build):
+    """Memoize ``build`` on its arguments and the live Py4J gateway.  Its
+    Columns are unresolved trees that no session owns, so every job, resume
+    group and stream micro-batch in one JVM shares them; a relaunched JVM (a
+    new gateway) drops them and builds its own."""
+    memo = {"gateway": None}
+    lock = threading.Lock()  # stream micro-batches call in from Py4J threads
+
+    @functools.wraps(build)
+    def memoized(*key):
+        with lock:
+            if memo["gateway"] is not SparkContext._gateway:
+                memo.clear()
+                memo["gateway"] = SparkContext._gateway
+            if key not in memo:
+                memo[key] = build(*key)
+            return memo[key]
+
+    return memoized
+
+
 def _native_routed_blocks(df: DataFrame, mode: str, validate: bool,
                           emit_raw: bool) -> DataFrame:
     """Fully-native (whole-stage-codegen) block rows for every turn the
@@ -159,17 +188,33 @@ def _native_routed_blocks(df: DataFrame, mode: str, validate: bool,
     claimed row; pytest's oracle-equality + native fuzz suites cover all
     three shapes against the kernel route.
 
+    Both expressions are built once per JVM (:func:`_native_exprs`); each
+    call only applies them to ``df``.
+
     This is the single biggest scale decision in the pipeline: the common
     transcript shapes never leave the JVM — no Arrow round-trip, no Python
     worker — so only genuinely multi-line structured payloads pay the
     kernel cost, and the input is scanned once.
     """
+    parse, arr = _native_exprs(mode, validate, emit_raw)
+    return df.select(
+        "conv_id", F.col("turn_idx").cast("int").alias("turn_idx"),
+        "role", "tool", "ts", "text", F.explode(F.array(parse)).alias("_p"),
+    ).select(
+        "conv_id", "turn_idx", "role", "tool", "ts",
+        F.explode(arr).alias("_b"),
+    ).select("conv_id", "turn_idx", "role", "tool", "ts", "_b.*")
+
+
+@_once_per_jvm
+def _native_exprs(mode: str, validate: bool, emit_raw: bool) -> tuple[Column, Column]:
+    """The native branch's ``parse`` struct over ``text`` and its block array
+    over the parsed ``_p`` fields; they name columns, never a DataFrame."""
     text = F.col("text")
     null_b = F.lit(None).cast("boolean")
     null_a = F.lit(None).cast("array<string>")
     null_d = F.lit(None).cast("double")
     null_s = F.lit(None).cast("string")
-    null_l = F.lit(None).cast("long")
     empty_arr = F.array().cast("array<string>")
     raw = F.coalesce(text, F.lit(""))
 
@@ -235,12 +280,6 @@ def _native_routed_blocks(df: DataFrame, mode: str, validate: bool,
         F.when(F.contains(text, F.lit("\t")), first_line).otherwise(null_s)
         .alias("tab_header"),
         n_lines.alias("n_lines"),
-    )
-    P = df.select(
-        "conv_id",
-        F.col("turn_idx").cast("int").alias("turn_idx"),
-        "role", "tool", "ts", "text",
-        F.explode(F.array(parse)).alias("_p"),
     )
     route = F.col("_p.route")
     slen = F.col("_p.slen")
@@ -370,10 +409,19 @@ def _native_routed_blocks(df: DataFrame, mode: str, validate: bool,
         .when(route == 2, F.array(tab_blk, dead_txt_blk))
         .otherwise(F.array(simple_blk))
     )
-    return P.select(
-        "conv_id", "turn_idx", "role", "tool", "ts",
-        F.explode(arr).alias("_b"),
-    ).select("conv_id", "turn_idx", "role", "tool", "ts", "_b.*")
+    return parse, arr
+
+
+@_once_per_jvm
+def _route_preds() -> tuple[Column, Column]:
+    """The router's (kernel, native) row filters: the kernel takes the tab-
+    or ``FIG;mode=``-bearing turns that no native claim covers."""
+    claimed = _native_fig_pred(F.col("text")) | _native_tab_pred(F.col("text"))
+    return (
+        F.expr(_COMPLEX_PRED) & ~claimed,
+        ~F.expr(f"coalesce({_COMPLEX_PRED}, false)")
+        | F.coalesce(claimed, F.lit(False)),
+    )
 
 
 def extract_blocks(
@@ -437,12 +485,8 @@ def extract_blocks(
     # the single-line structured shapes (whole-text figure line; all-tab
     # lines) — at transcript mixes this roughly halves the rows crossing
     # the Python boundary (guide §4: the boundary itself is the cost).
-    claimed = _native_fig_pred(F.col("text")) | _native_tab_pred(F.col("text"))
-    complex_df = df.filter(F.expr(_COMPLEX_PRED) & ~claimed)
-    native_df = df.filter(
-        ~F.expr(f"coalesce({_COMPLEX_PRED}, false)")
-        | F.coalesce(claimed, F.lit(False))
-    )
+    kernel_pred, native_pred = _route_preds()
+    complex_df = df.filter(kernel_pred)
     if salt_repartition:
         # per-turn hash spread: breaks long-conversation skew (SURVEY §4.2);
         # safe because extraction is per-turn and ordering is intrinsic.
@@ -453,7 +497,7 @@ def extract_blocks(
         functools.partial(_kernel, mode, validate, cols), schema=schema
     )
     blocks = kernel_blocks.unionByName(
-        _native_routed_blocks(native_df, mode, validate, emit_raw)
+        _native_routed_blocks(df.filter(native_pred), mode, validate, emit_raw)
     )
     return (
         blocks.withColumn(
@@ -470,7 +514,7 @@ def extract_blocks(
             "conv_bucket", F.pmod(F.xxhash64("conv_id"), F.lit(n_buckets)).cast("int")
         )
         .select(*[f.name for f in EXTRACTED.fields if emit_raw or f.name != "raw_content"],
-                "run_id", "src_snapshot_id", "partition_id", "conv_bucket")
+                *LINEAGE_COLUMNS)
     )
 
 
@@ -514,43 +558,33 @@ def type_stats(blocks: DataFrame) -> DataFrame:
 def extraction_metrics(blocks: DataFrame, run_id: str) -> DataFrame:
     """Sidecar metrics rows: per (partition, bucket) status/type counts plus
     retry counts — the reference's counters (pipeline.py:255-319) made
-    per-partition for lineage (north_rule)."""
+    per-partition for lineage (north_rule).  One aggregation; each group
+    yields its ``blocks_<status>``, ``retried`` and ``avg_confidence`` rows
+    through one ``inline`` generator, so ``blocks`` is scanned once."""
     base = blocks.groupBy("partition_id", "conv_bucket", "status", "chunk_type").agg(
         F.count("*").alias("n"),
         F.sum(F.col("retried").cast("long")).alias("n_retried"),
         F.avg("confidence").alias("avg_conf"),
     )
-    counts = base.select(
+
+    def row(phase: str, metric: Column, value: str, detail: Column) -> Column:
+        return F.struct(F.lit(phase).alias("phase"), metric.alias("metric"),
+                        F.col(value).cast("double").alias("value"),
+                        detail.alias("detail"))
+
+    return base.select(
         F.lit(run_id).alias("run_id"),
         "partition_id",
         "conv_bucket",
-        F.lit("extract").alias("phase"),
-        F.concat(F.lit("blocks_"), "status").alias("metric"),
-        F.col("n").cast("double").alias("value"),
-        F.col("chunk_type").alias("detail"),
+        F.inline(F.array(
+            row("extract", F.concat(F.lit("blocks_"), "status"), "n",
+                F.col("chunk_type")),
+            row("extract", F.lit("retried"), "n_retried", F.col("chunk_type")),
+            row("validate", F.lit("avg_confidence"), "avg_conf",
+                F.concat_ws("|", "chunk_type", "status")),
+        )),
         F.current_timestamp().alias("ts"),
     )
-    retries = base.select(
-        F.lit(run_id).alias("run_id"),
-        "partition_id",
-        "conv_bucket",
-        F.lit("extract").alias("phase"),
-        F.lit("retried").alias("metric"),
-        F.col("n_retried").cast("double").alias("value"),
-        F.col("chunk_type").alias("detail"),
-        F.current_timestamp().alias("ts"),
-    )
-    scores = base.select(
-        F.lit(run_id).alias("run_id"),
-        "partition_id",
-        "conv_bucket",
-        F.lit("validate").alias("phase"),
-        F.lit("avg_confidence").alias("metric"),
-        F.col("avg_conf").alias("value"),
-        F.concat_ws("|", "chunk_type", "status").alias("detail"),
-        F.current_timestamp().alias("ts"),
-    )
-    return counts.unionByName(retries).unionByName(scores)
 
 
 def commit_slice(

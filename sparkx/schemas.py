@@ -100,15 +100,5 @@ METRICS = StructType(
     ]
 )
 
-# ── cross-link edges (CrossLinkMetadata, models.py:140-160; heuristic
-#    crew_mlx_tools.py:358-397) ──────────────────────────────────────────────
-CROSSLINKS = StructType(
-    [
-        StructField("source_chunk_id", StringType(), False),
-        StructField("reference_type", StringType(), False),
-        StructField("confidence", DoubleType(), False),
-    ]
-)
-
 SURVIVING_STATUSES = ("accepted", "corrected")
 DROP_STATUSES = ("discarded", "dropped_short", "dropped_table_small", "dropped_figure_small")

@@ -65,7 +65,7 @@ def start_extraction_stream(
     transcripts = stream_transcripts(spark, in_dir)
 
     writer = (
-        surviving_stream_writer(transcripts)
+        transcripts.writeStream.outputMode("append")
         .foreachBatch(make_batch_sink(out_path, mode=mode, run_id=run_id))
         .option("checkpointLocation", checkpoint_dir)
     )
@@ -143,10 +143,6 @@ def make_batch_sink(out_path: str, mode: str = "fastpath", run_id: str = "stream
         )
 
     return _sink
-
-
-def surviving_stream_writer(transcripts: DataFrame):
-    return transcripts.writeStream.outputMode("append")
 
 
 # ── custom stateful streaming operator ───────────────────────────────────────

@@ -18,21 +18,6 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 
-FAMILIES = [
-    "prose",
-    "prose_long",
-    "short",
-    "table_md",
-    "table_small",
-    "glyph_table",
-    "figure_ref",
-    "figure_small",
-    "figure_ocr",
-    "crossref_prose",
-    "multiblock",
-    "lowconf",
-]
-
 _WORDS = (
     "model data spark table figure extraction pipeline transcript agent "
     "analysis accuracy latency throughput shuffle partition column vector "
