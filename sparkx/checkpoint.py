@@ -10,15 +10,19 @@ implemented format-agnostically:
   (``pmod(xxhash64(conv_id), n_groups)``) — each group is an independent,
   internally-parallel slice of the input (all cores busy within a group).
 * Each group commits through :func:`sparkx.pipeline.commit_slice`, the one
-  commit function (``run_extraction`` is its single-slice case): survivors
-  overwrite ``<out>/extracted/commit_group=<g>/`` and the metrics sidecar
-  overwrites ``<out>/metrics/commit_group=<g>/``; then a manifest JSON
-  (status counts, run lineage) is renamed into
-  ``<out>/_ledger/group_<g>.json``.  The rename is the snapshot commit point.
+  commit function of the one-shot job, each group and each stream
+  micro-batch: survivors overwrite ``<out>/extracted/commit_group=<g>/``,
+  the metrics sidecar overwrites ``<out>/metrics/commit_group=<g>/``, and
+  then the slice's manifest (status counts, run lineage, parameters) is
+  renamed into ``<out>/_ledger/commit_group_<g>.json``.  The rename is the
+  snapshot commit point.
 * Resume = skip groups whose manifest exists; re-running a half-written
   group overwrites both of its slices, so survivors and metrics are each
   committed exactly once (deterministic ``chunk_id`` = sha2 of
   ``conv_id|turn_idx|type|idx``, so re-extraction produces identical rows).
+* Snapshot reads: :func:`read_extracted` reads only the slices that a
+  manifest names, so a group killed between its survivors write and its
+  manifest rename is invisible to readers until it is redone.
 
 The public API is identical whether the backing store is this parquet ledger
 or an Iceberg catalog table, and the Iceberg path is a strict simplification
@@ -27,16 +31,12 @@ or an Iceberg catalog table, and the Iceberg path is a strict simplification
 
 from __future__ import annotations
 
-import json
-import os
 import time
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from sparkx.pipeline import commit_slice, extract_blocks
-from sparkx.schemas import SURVIVING_STATUSES
+from sparkx.pipeline import _ledger_dir, _manifests, commit_slice, extract_blocks
 from sparkx.table_sink import DEFAULT_SINK
 
 
@@ -44,30 +44,8 @@ class SimulatedFailure(RuntimeError):
     """Raised by tests to kill a run between group commits."""
 
 
-def _ledger_dir(out_path: str) -> str:
-    return os.path.join(out_path, "_ledger")
-
-
 def completed_groups(out_path: str) -> dict[int, dict]:
-    led = _ledger_dir(out_path)
-    if not os.path.isdir(led):
-        return {}
-    done = {}
-    for name in os.listdir(led):
-        if name.startswith("group_") and name.endswith(".json"):
-            with open(os.path.join(led, name)) as f:
-                m = json.load(f)
-            done[int(m["group"])] = m
-    return done
-
-
-def _commit_manifest(out_path: str, name: str, manifest: dict) -> None:
-    led = _ledger_dir(out_path)
-    os.makedirs(led, exist_ok=True)
-    tmp = os.path.join(led, f".tmp_{uuid.uuid4().hex}")
-    with open(tmp, "w") as f:
-        json.dump(manifest, f, indent=1)
-    os.replace(tmp, os.path.join(led, name))  # atomic — this IS the snapshot commit
+    return {int(m["group"]): m for m in _manifests(out_path) if "group" in m}
 
 
 def run_resumable(
@@ -95,24 +73,16 @@ def run_resumable(
     # Fail fast on parameter drift: group membership is a function of
     # n_groups (pmod(xxhash64(conv_id), n_groups)), so resuming a ledger
     # written under different n_groups would silently drop/duplicate
-    # conversations; a mode/validate change would mix incompatible outputs.
-    params = {
-        "n_groups": n_groups,
-        "mode": mode,
-        "validate": validate,
-        # n_buckets shapes committed output too (conv_bucket values/partition
-        # layout): resuming under a different n_buckets would silently mix
-        # bucket layouts across committed and newly-run groups.
-        "n_buckets": n_buckets,
-    }
+    # conversations; a mode/validate change would mix incompatible outputs,
+    # and n_buckets shapes committed output too (conv_bucket values).
+    params = {"mode": mode, "validate": validate, "n_buckets": n_buckets}
+    recorded = {**params, "n_groups": n_groups}
     for g, m in done.items():
-        # compare only keys the manifest recorded (older ledgers predate
-        # n_buckets) — a missing key is not drift, a differing one is
-        prev = {k: m[k] for k in params if k in m}
-        if prev and prev != {k: params[k] for k in prev}:
+        prev = {k: m.get(k) for k in recorded}
+        if prev != recorded:
             raise ValueError(
                 f"ledger group {g} was committed with {prev}, but this run "
-                f"uses {params}; resume with the original parameters or use "
+                f"uses {recorded}; resume with the original parameters or use "
                 f"a fresh out_path"
             )
     group_col = F.pmod(F.xxhash64("conv_id"), F.lit(n_groups)).cast("int")
@@ -121,29 +91,12 @@ def run_resumable(
     for g in range(n_groups):
         if g in done:
             continue
-        slice_df = transcripts.filter(group_col == g)
         blocks = extract_blocks(
-            slice_df, mode=mode, validate=validate, run_id=run_id,
-            src_snapshot_id=f"group_{g}", n_buckets=n_buckets,
+            transcripts.filter(group_col == g), run_id=run_id,
+            src_snapshot_id=f"group_{g}", **params,
         )
-        status_counts = commit_slice(blocks, out_path, f"commit_group={g}", run_id, sink)
-        _commit_manifest(
-            out_path,
-            f"group_{g}.json",
-            {
-                "group": g,
-                "run_id": run_id,
-                "committed_at": time.time(),
-                "n_groups": n_groups,
-                "mode": mode,
-                "validate": validate,
-                "n_buckets": n_buckets,
-                "status_counts": status_counts,
-                "n_surviving": sum(
-                    v for k, v in status_counts.items() if k in SURVIVING_STATUSES
-                ),
-            },
-        )
+        commit_slice(blocks, out_path, f"commit_group={g}", run_id, sink,
+                     {**recorded, "group": g})
         executed += 1
         if fail_after_groups is not None and executed >= fail_after_groups:
             raise SimulatedFailure(f"injected failure after {executed} groups")
@@ -157,4 +110,16 @@ def run_resumable(
 
 
 def read_extracted(spark: SparkSession, out_path: str) -> DataFrame:
-    return spark.read.parquet(f"{out_path}/extracted")
+    """The committed survivors: only the slices that a manifest names, read
+    under ``<out>/extracted`` as base path so partition directories such as
+    ``commit_group`` stay columns."""
+    base = f"{out_path}/extracted"
+    slices = sorted(m["slice"] for m in _manifests(out_path))
+    if not slices:
+        raise FileNotFoundError(
+            f"no committed slice under {out_path}: {_ledger_dir(out_path)} "
+            f"names none (nothing was committed, or a re-run was killed "
+            f"before its commit)"
+        )
+    paths = [f"{base}/{s}".rstrip("/") for s in slices]
+    return spark.read.option("basePath", base).parquet(*paths)

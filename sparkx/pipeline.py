@@ -22,7 +22,8 @@ branches of a single plan:
         replaces uuid4 models.py:126 for reproducibility)
       → lineage columns (run_id, src_snapshot_id, partition_id, conv_bucket)
       → commit_slice: surviving rows → sink; all rows → metrics sidecar
-        (one aggregate, then one generator emits each group's three rows)
+        (one aggregate, then one generator emits each group's three rows);
+        then the slice's manifest rename, the commit point
 
 The router's predicates and the native branch's expression trees name only
 columns, never a DataFrame, so they are built once per JVM (the trees once
@@ -37,7 +38,11 @@ depended on physically (north_rule W1 invariant).
 from __future__ import annotations
 
 import functools
+import json
+import os
 import threading
+import time
+import uuid
 from collections.abc import Iterator
 
 import pandas as pd
@@ -432,7 +437,6 @@ def extract_blocks(
     src_snapshot_id: str = "",
     n_partitions: int | None = None,
     n_buckets: int = DEFAULT_BUCKETS,
-    salt_repartition: bool | str = "auto",
     emit_raw: bool = True,
 ) -> DataFrame:
     """All candidate blocks (surviving + dropped) with lineage columns.
@@ -443,23 +447,19 @@ def extract_blocks(
     pointer back).  Halves Arrow transfer + sink bytes; defaults to True so
     tests can compare raw_content byte-for-byte.
 
-    ``salt_repartition`` — the skew-break shuffle is a REPAIR, not a default
-    cost, because extraction is per-turn and needs no co-location:
-
-    * ``"auto"`` (default): salt only when the input has fewer partitions
-      than the target — the under-parallel case (one huge file, a collapsed
-      join, a micro-batch).  A healthy parquet scan is already byte-split
-      (``maxPartitionBytes``), so a 100 TB input comes in ~800k balanced
-      splits and salting it would mean shuffling the entire kernel payload
-      for nothing (measured ~20% of the hybrid wall at sf-bench scale).
-      CAVEAT: partition COUNT is a parallelism probe, not a balance probe —
-      an upstream that clustered by conversation into many-but-skewed
-      partitions (e.g. ``repartition("conv_id")``) passes the probe unsalted;
-      such callers must pass ``True``.
-    * ``True``: always salt (the r1 behavior — correct for arbitrary
-      upstream layouts including conv-clustered ones, wasteful for
-      scan-shaped ones).
-    * ``False``: never (callers that already repartitioned).
+    The skew-break shuffle is a REPAIR, not a default cost, because
+    extraction is per-turn and needs no co-location: the kernel branch is
+    salted only when the input has fewer partitions than ``n_partitions``
+    (default 2× the default parallelism) — the under-parallel case (one huge
+    file, a collapsed join, a micro-batch).  A healthy parquet scan is
+    already byte-split (``maxPartitionBytes``), so a 100 TB input comes in
+    ~800k balanced splits and salting it would mean shuffling the entire
+    kernel payload for nothing (measured ~20% of the hybrid wall at sf-bench
+    scale).  CAVEAT: partition COUNT is a parallelism probe, not a balance
+    probe — an upstream that clustered by conversation into many-but-skewed
+    partitions (e.g. ``repartition("conv_id")``) passes the probe unsalted;
+    such callers should spread the input per turn first.  ``n_partitions=1``
+    never salts.
 
     Every turn is routed once, per row: prose turns and the single-line
     structured shapes are built in pure Catalyst expressions
@@ -469,9 +469,6 @@ def extract_blocks(
     """
     df = transcripts
     n_partitions = n_partitions or df.sparkSession.sparkContext.defaultParallelism * 2
-    if salt_repartition == "auto":
-        # planning-only partition probe (no job): under-parallel input → salt
-        salt_repartition = df.rdd.getNumPartitions() < n_partitions
 
     # kernel output = EXTRACTED minus chunk_id (added natively below), all
     # nullable as Arrow hands it back
@@ -487,7 +484,8 @@ def extract_blocks(
     # the Python boundary (guide §4: the boundary itself is the cost).
     kernel_pred, native_pred = _route_preds()
     complex_df = df.filter(kernel_pred)
-    if salt_repartition:
+    # planning-only partition probe (no job): under-parallel input → salt
+    if df.rdd.getNumPartitions() < n_partitions:
         # per-turn hash spread: breaks long-conversation skew (SURVEY §4.2);
         # safe because extraction is per-turn and ordering is intrinsic.
         complex_df = complex_df.repartition(
@@ -587,15 +585,60 @@ def extraction_metrics(blocks: DataFrame, run_id: str) -> DataFrame:
     )
 
 
+def _ledger_dir(out_path: str) -> str:
+    return os.path.join(out_path, "_ledger")
+
+
+def _manifest_path(out_path: str, slice_name: str) -> str:
+    """``<out>/_ledger/<slice>.json``, named from the slice name alone (the
+    unnamed one-shot slice is ``root``)."""
+    name = slice_name.replace("/", "_").replace("=", "_") or "root"
+    return os.path.join(_ledger_dir(out_path), f"{name}.json")
+
+
+def _commit_manifest(path: str, manifest: dict) -> None:
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    tmp = os.path.join(os.path.dirname(path), f".tmp_{uuid.uuid4().hex}")
+    with open(tmp, "w") as f:
+        json.dump(manifest, f, indent=1)
+    os.replace(tmp, path)  # atomic — this IS the snapshot commit
+
+
+def _manifests(out_path: str) -> list[dict]:
+    """Every slice manifest committed under ``out_path``."""
+    led = _ledger_dir(out_path)
+    if not os.path.isdir(led):
+        return []
+    found = []
+    for name in os.listdir(led):
+        if name.endswith(".json"):
+            with open(os.path.join(led, name)) as f:
+                m = json.load(f)
+            if "slice" in m:
+                found.append(m)
+    return found
+
+
 def commit_slice(
-    blocks: DataFrame, out_path: str, slice_name: str, run_id: str, sink
+    blocks: DataFrame, out_path: str, slice_name: str, run_id: str, sink,
+    params: dict,
 ) -> dict:
-    """Commit one slice of extracted blocks and return its block counts by
-    status.  Survivors go to ``<out>/extracted/<slice>`` and the metrics
-    sidecar to ``<out>/metrics/<slice>``, each through
-    ``sink.overwrite_slice``, so redoing a slice replaces both instead of
-    adding to them.  The counts come from an ``Observation`` on the
-    survivors write: two write actions, no collect."""
+    """Commit one slice of extracted blocks and return its manifest.
+
+    Survivors go to ``<out>/extracted/<slice>`` and the metrics sidecar to
+    ``<out>/metrics/<slice>``, each through ``sink.overwrite_slice``; then
+    the manifest is renamed into ``<out>/_ledger/<slice>.json``, the commit
+    point.  The slice's old manifest is removed before the first overwrite,
+    so a redone slice is uncommitted until it is whole again, and readers
+    (:func:`sparkx.checkpoint.read_extracted`) see only committed slices.
+    The manifest holds ``slice``, ``run_id``, ``committed_at``,
+    ``status_counts`` (from an ``Observation`` on the survivors write: two
+    write actions, no collect), ``n_surviving`` and the caller's ``params``
+    (the extraction parameters, plus ``group``/``n_groups`` for a resume
+    group)."""
+    manifest_path = _manifest_path(out_path, slice_name)
+    if os.path.exists(manifest_path):
+        os.remove(manifest_path)
     counts = Observation()
     blocks.persist()
     try:
@@ -613,7 +656,17 @@ def commit_slice(
         )
     finally:
         blocks.unpersist()
-    return {s: n for s, n in counts.get.items() if n}
+    status_counts = {s: n for s, n in counts.get.items() if n}
+    manifest = {
+        "slice": slice_name,
+        "run_id": run_id,
+        "committed_at": time.time(),
+        "status_counts": status_counts,
+        "n_surviving": sum(status_counts.get(s, 0) for s in SURVIVING_STATUSES),
+        **params,
+    }
+    _commit_manifest(manifest_path, manifest)
+    return manifest
 
 
 def run_extraction(
@@ -629,13 +682,16 @@ def run_extraction(
     """One-shot (non-resumable) run, returning block totals by status.  It
     commits through the one commit function, :func:`commit_slice`, with an
     empty slice name: survivors land unpartitioned in ``<out>/extracted``
-    (``conv_bucket`` stays a column), the metrics in ``<out>/metrics``, and a
-    re-run into the same ``out_path`` replaces both.  For checkpointed runs
-    use sparkx.checkpoint.run_resumable, which commits each group through the
-    same function to ``extracted/commit_group=<g>/`` and
-    ``metrics/commit_group=<g>/``."""
+    (``conv_bucket`` stays a column), the metrics in ``<out>/metrics`` and
+    the manifest in ``<out>/_ledger/root.json``.  A re-run into the same
+    ``out_path`` uncommits the old output first and replaces it, so a re-run
+    killed between its two overwrites leaves nothing committed.  For
+    checkpointed runs use sparkx.checkpoint.run_resumable, which commits
+    each group through the same function to ``extracted/commit_group=<g>/``
+    and ``metrics/commit_group=<g>/``."""
+    params = {"mode": mode, "validate": validate, "n_buckets": n_buckets}
     blocks = extract_blocks(
-        transcripts, mode=mode, validate=validate, run_id=run_id,
-        src_snapshot_id=src_snapshot_id, n_buckets=n_buckets,
+        transcripts, run_id=run_id, src_snapshot_id=src_snapshot_id, **params
     )
-    return commit_slice(blocks, out_path, "", run_id, DEFAULT_SINK)
+    manifest = commit_slice(blocks, out_path, "", run_id, DEFAULT_SINK, params)
+    return manifest["status_counts"]

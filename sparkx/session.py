@@ -34,7 +34,7 @@ def spread_narrow_input(df, min_parts: int = 8, cache_key: str | None = None):
     shuffle moves only the tiny table.  Wide inputs (a healthy 100 TB scan
     arrives in thousands of byte-range splits) pass through untouched, so
     the scale plan shape is unchanged.  The probe is planning-only (no
-    job), the same idiom as extract_blocks' salt_repartition="auto".
+    job), the same idiom as extract_blocks' salt probe.
     Explicit-numPartitions repartition is exempt from AQE coalescing, so
     the spread survives adaptive re-planning.
 

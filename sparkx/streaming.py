@@ -13,15 +13,16 @@ Design:
 * the identical ``extract_blocks`` transformation (mapInPandas is fully
   streaming-compatible: stateless per-batch);
 * ``foreachBatch`` sink → the batch job's commit function
-  (:func:`sparkx.pipeline.commit_slice`: survivors + metrics sidecar) and a
-  ledger manifest per micro-batch, so batch and streaming outputs are
-  indistinguishable to readers;
+  (:func:`sparkx.pipeline.commit_slice`: survivors, metrics sidecar, then
+  the ledger manifest ``_ledger/stream_batch_id_<id>.json``), so batch and
+  streaming outputs are indistinguishable to readers;
 * ``Trigger.AvailableNow`` for catch-up runs (used by tests), continuous
   trigger in production;
 * exactly-once: Spark's streaming checkpoint (offsets) + each micro-batch
   written to its own deterministic ``batch_id=<id>`` directory with
-  overwrite — a batch replayed after a mid-commit failure rewrites the same
-  directory instead of appending duplicates (mirrors the batch ledger's
+  overwrite — a batch replayed after a mid-commit failure first removes its
+  manifest, then rewrites the same directories instead of appending
+  duplicates, and commits again (the batch ledger's
   overwrite-then-manifest commit).
 """
 
@@ -34,9 +35,14 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
-from sparkx.checkpoint import _commit_manifest
-from sparkx.pipeline import commit_slice, extract_blocks
-from sparkx.schemas import SURVIVING_STATUSES, TRANSCRIPTS
+from sparkx.pipeline import (
+    DEFAULT_BUCKETS,
+    _commit_manifest,
+    _ledger_dir,
+    commit_slice,
+    extract_blocks,
+)
+from sparkx.schemas import TRANSCRIPTS
 from sparkx.table_sink import DEFAULT_SINK
 
 
@@ -81,7 +87,7 @@ def _guard_stream_identity(out_path: str, checkpoint_dir: str, mode: str) -> Non
     with committed ``batch_id=`` output would re-number batches from 0 and
     overwrite differently-sliced data (the streaming analog of the batch
     ledger's parameter-drift guard in sparkx.checkpoint)."""
-    meta_path = os.path.join(out_path, "_ledger", "stream_meta.json")
+    meta_path = os.path.join(_ledger_dir(out_path), "stream_meta.json")
     params = {
         "checkpoint_dir": os.path.abspath(checkpoint_dir),
         "mode": mode,
@@ -103,44 +109,28 @@ def _guard_stream_identity(out_path: str, checkpoint_dir: str, mode: str) -> Non
                 f"fresh out_path"
             )
         return
-    _commit_manifest(out_path, "stream_meta.json", params)
+    _commit_manifest(meta_path, params)
 
 
 def make_batch_sink(out_path: str, mode: str = "fastpath", run_id: str = "stream"):
     """foreachBatch sink: extract → :func:`commit_slice` of the
-    ``stream/batch_id=<id>`` slice → ledger manifest.
+    ``stream/batch_id=<id>`` slice, which ends with the batch's manifest.
 
     Replay-idempotent: a micro-batch retried after the data write but before
-    the streaming checkpoint commit overwrites its own survivors and metrics
-    slices, so duplicates cannot accumulate — the failure window parquet
-    append could not cover.  Module-level so tests can drive a replay
-    directly."""
+    the streaming checkpoint commit uncommits its manifest and overwrites its
+    own survivors and metrics slices, so duplicates cannot accumulate — the
+    failure window parquet append could not cover.  A micro-batch of a few
+    small files is under-parallel, so ``extract_blocks`` salts its kernel
+    branch.  Module-level so tests can drive a replay directly."""
+    params = {"mode": mode, "validate": True, "n_buckets": DEFAULT_BUCKETS}
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
         blocks = extract_blocks(
-            batch_df,
-            mode=mode,
-            run_id=run_id,
-            src_snapshot_id=f"microbatch_{batch_id}",
-            # streaming micro-batches are already small slices; keep the
-            # partition count bounded instead of 2×cores per batch
-            salt_repartition=True,
+            batch_df, run_id=run_id, src_snapshot_id=f"microbatch_{batch_id}",
+            **params,
         )
-        counts = commit_slice(
-            blocks, out_path, f"stream/batch_id={batch_id}", run_id, DEFAULT_SINK
-        )
-        _commit_manifest(
-            out_path,
-            f"stream_batch_{batch_id}.json",
-            {
-                "group": f"microbatch_{batch_id}",
-                "run_id": run_id,
-                "committed_at": time.time(),
-                "n_surviving": sum(
-                    v for k, v in counts.items() if k in SURVIVING_STATUSES
-                ),
-            },
-        )
+        commit_slice(blocks, out_path, f"stream/batch_id={batch_id}", run_id,
+                     DEFAULT_SINK, params)
 
     return _sink
 

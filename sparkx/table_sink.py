@@ -15,8 +15,11 @@ runtime jar, so the engine ships two implementations of one small interface:
 Swapping a deployment from parquet to Iceberg = passing a different sink to
 ``upsert_extracted`` / ``run_resumable``; no call-site logic changes.  Under
 Iceberg the JSON ledger manifest becomes redundant with snapshot metadata
-(every commit is a snapshot) but stays harmless — the resume anti-join reads
-whichever exists.
+(every commit is a snapshot) but stays harmless.  On the parquet sink the
+manifest that :func:`sparkx.pipeline.commit_slice` renames in after both
+overwrites is the only commit record: resume and
+:func:`sparkx.checkpoint.read_extracted` read the manifests, never the
+directories alone.
 """
 
 from __future__ import annotations

@@ -58,7 +58,7 @@ def test_memo_key_covers_every_input(spark):
     combos = list(itertools.product(["fastpath", "agentic"], [True, False], [True, False]))
     for mode, validate, emit_raw in combos + combos:
         routed = extract_blocks(df, mode=mode, validate=validate, emit_raw=emit_raw,
-                                salt_repartition=False).toPandas()
+                                n_partitions=1).toPandas()
         assert ("raw_content" in routed.columns) == emit_raw
         assert_routed_equals_kernel(routed, turns, mode, validate, emit_raw)
 

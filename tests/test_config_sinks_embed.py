@@ -1,35 +1,16 @@
-"""Config source (S9), JSON sink truncation (S6), upsert idempotence (S5),
+"""JSON sink truncation (S6), upsert idempotence (S5),
 feature-hash embedder (U7)."""
 
 from __future__ import annotations
 
-import json
 import math
 
 from pyspark.sql import functions as F
 
-from sparkx.config import ConfigLoader
 from sparkx.pipeline import extract_blocks, surviving
 from sparkx.schemas import TRANSCRIPTS
 from sparkx.sinks import save_chunks_json, serialized_chunks, upsert_extracted
 from sparkx.synth import synth_pandas
-
-
-class TestConfig:
-    def test_defaults(self, tmp_path):
-        c = ConfigLoader(settings_path=str(tmp_path / "missing.json"))
-        assert c.get("pipeline.max_context_chunks") == 8
-        assert c.get("pipeline.chunk_size") == 800
-        assert c.get("agents.confidence_threshold") == 0.5
-        assert c.get("nope.nothing", "d") == "d"
-
-    def test_deep_merge(self, tmp_path):
-        p = tmp_path / "settings.json"
-        p.write_text(json.dumps({"pipeline": {"chunk_size": 1234}, "extra": {"x": 1}}))
-        c = ConfigLoader(settings_path=str(p))
-        assert c.get("pipeline.chunk_size") == 1234
-        assert c.get("pipeline.max_context_chunks") == 8  # untouched sibling
-        assert c.get("extra.x") == 1
 
 
 def _extracted(spark, seed=81):

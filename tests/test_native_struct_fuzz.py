@@ -66,7 +66,7 @@ def _both_routes(spark, texts, mode, validate=True, emit_raw=True):
     turns = _frame(texts)
     routed = extract_blocks(
         spark.createDataFrame(turns, schema=TRANSCRIPTS), mode=mode,
-        validate=validate, emit_raw=emit_raw, salt_repartition=False,
+        validate=validate, emit_raw=emit_raw, n_partitions=1,
     )
     assert_routed_equals_kernel(routed.toPandas(), turns, mode, validate, emit_raw)
 
@@ -155,7 +155,7 @@ def test_claimed_rows_have_no_python_stage(spark):
         _frame(["FIG;mode=RGB;w=100;h=200;caption=c", "a\tb"]),
         schema=TRANSCRIPTS,
     )
-    plan = extract_blocks(df, salt_repartition=False)._jdf.queryExecution().explainString(
+    plan = extract_blocks(df, n_partitions=1)._jdf.queryExecution().explainString(
         spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
     )
     n_mip = len(re.findall(r"^\s*\(\d+\)\s+MapInPandas", plan, re.M))

@@ -3,6 +3,8 @@
 
 from __future__ import annotations
 
+import json
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -13,7 +15,7 @@ from sparkx.checkpoint import (
     read_extracted,
     run_resumable,
 )
-from sparkx.pipeline import run_extraction
+from sparkx.pipeline import extract_blocks, run_extraction, surviving
 from sparkx.schemas import TRANSCRIPTS
 from sparkx.synth import synth_pandas
 from sparkx.table_sink import ParquetDirSink
@@ -43,6 +45,16 @@ def _sidecar_totals(spark, out):
         .collect()
     )
     return {r.metric.removeprefix("blocks_"): int(r.n) for r in rows if r.n}
+
+
+def _chunk_ids(df):
+    return sorted(r.chunk_id for r in df.select("chunk_id").collect())
+
+
+def _group_chunk_ids(df, n_groups, groups):
+    """Surviving chunk ids of the given resume groups of ``df``."""
+    in_groups = F.pmod(F.xxhash64("conv_id"), F.lit(n_groups)).isin(*groups)
+    return _chunk_ids(surviving(extract_blocks(df.filter(in_groups))))
 
 
 def _ledger_totals(out):
@@ -142,6 +154,26 @@ def test_resume_rejects_parameter_drift(spark, tmp_path):
     assert len(summary["ledger"]) == 4
 
 
+def test_resume_rejects_a_record_missing_a_parameter(tmp_path):
+    """Every group record carries every parameter, so one without
+    ``n_buckets`` cannot be shown to match this run and is refused (before
+    any Spark work)."""
+    led = tmp_path / "_ledger"
+    led.mkdir()
+    (led / "commit_group_0.json").write_text(json.dumps({
+        "slice": "commit_group=0", "group": 0, "n_groups": 2,
+        "mode": "fastpath", "validate": True,
+    }))
+    with pytest.raises(ValueError, match="committed with"):
+        run_resumable(None, None, str(tmp_path), n_groups=2)
+
+
+def test_read_extracted_refuses_an_uncommitted_out_path(tmp_path):
+    (tmp_path / "extracted").mkdir()
+    with pytest.raises(FileNotFoundError, match="no committed slice"):
+        read_extracted(None, str(tmp_path))
+
+
 def test_lineage_columns_present(spark, tmp_path):
     df = _transcripts(spark, seed=43)
     out = str(tmp_path / "lin")
@@ -168,7 +200,10 @@ def test_kill_at_each_commit_step_commits_metrics_once(spark, tmp_path, nth, aft
     with pytest.raises(SimulatedFailure):
         run_resumable(spark, df, out, n_groups=2, run_id="try1",
                       sink=_FailingSink(nth, after))
-    assert len(completed_groups(out)) == 1
+    committed = completed_groups(out)
+    assert len(committed) == 1
+    # readers see exactly the committed group, never the killed one's slices
+    assert _chunk_ids(read_extracted(spark, out)) == _group_chunk_ids(df, 2, committed)
 
     summary = run_resumable(spark, df, out, n_groups=2, run_id="try2")
     assert summary["groups_executed_this_run"] == 1
@@ -180,7 +215,7 @@ def test_kill_at_each_commit_step_commits_metrics_once(spark, tmp_path, nth, aft
     assert read_extracted(spark, out).count() == n_surviving
 
 
-def test_run_extraction_commits_once(spark, tmp_path):
+def test_run_extraction_commits_once(spark, tmp_path, monkeypatch):
     seed = 59
     df = _transcripts(spark, seed=seed)
     out = str(tmp_path / "oneshot")
@@ -194,4 +229,18 @@ def test_run_extraction_commits_once(spark, tmp_path):
 
     got = spark.read.parquet(f"{out}/extracted")
     assert "conv_bucket" in got.columns
-    assert got.count() == totals.get("accepted", 0) + totals.get("corrected", 0)
+    n_surviving = totals.get("accepted", 0) + totals.get("corrected", 0)
+    assert got.count() == n_surviving
+
+    # a re-run killed between its two overwrites uncommitted the old output
+    # and committed nothing: readers get an error, not half a run
+    with monkeypatch.context() as m:
+        m.setattr("sparkx.pipeline.DEFAULT_SINK", _FailingSink(1, after=True))
+        with pytest.raises(SimulatedFailure):
+            run_extraction(spark, df, out, run_id="killed")
+    with pytest.raises(FileNotFoundError, match="no committed slice"):
+        read_extracted(spark, out)
+
+    assert run_extraction(spark, df, out, run_id="clean") == totals
+    assert _sidecar_totals(spark, out) == totals
+    assert read_extracted(spark, out).count() == n_surviving

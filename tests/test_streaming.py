@@ -58,6 +58,9 @@ def test_sink_replay_is_idempotent(spark, tmp_path):
     """ADVICE r1: a micro-batch retried after the data write but before the
     streaming-checkpoint commit must NOT duplicate rows — the batch-keyed
     overwrite sink rewrites its own survivors and metrics slices on replay."""
+    import json
+
+    from sparkx.checkpoint import read_extracted
     from sparkx.pipeline import extract_blocks
     from sparkx.schemas import TRANSCRIPTS
     from sparkx.streaming import make_batch_sink
@@ -67,8 +70,13 @@ def test_sink_replay_is_idempotent(spark, tmp_path):
     out = str(tmp_path / "replay_out")
     sink = make_batch_sink(out, mode="fastpath", run_id="replay")
 
+    def manifests():
+        led = tmp_path / "replay_out" / "_ledger"
+        return [json.loads(f.read_text()) for f in sorted(led.glob("*.json"))]
+
     sink(batch, 0)
     first = spark.read.parquet(f"{out}/extracted/stream").toPandas()
+    [first_manifest] = manifests()
     sink(batch, 0)  # simulated replay of the same micro-batch
     second = spark.read.parquet(f"{out}/extracted/stream").toPandas()
     assert len(second) == len(first)
@@ -81,6 +89,14 @@ def test_sink_replay_is_idempotent(spark, tmp_path):
     got = blocks.groupby("metric").value.sum().to_dict()
     want = extract_blocks(batch).groupBy("status").count().toPandas()
     assert got == {f"blocks_{s}": float(n) for s, n in zip(want.status, want["count"])}
+    # the replay left exactly one manifest for the batch, and it is the
+    # replay's: its counts are one extraction's and it was committed later
+    [manifest] = manifests()
+    assert manifest["slice"] == "stream/batch_id=0"
+    assert manifest["committed_at"] > first_manifest["committed_at"]
+    assert manifest["status_counts"] == dict(zip(want.status, want["count"]))
+    assert manifest["n_surviving"] == len(second)
+    assert sorted(read_extracted(spark, out).toPandas().chunk_id) == sorted(second.chunk_id)
 
 
 def test_stream_restart_identity_guard(spark, tmp_path):

@@ -92,8 +92,8 @@ def main() -> int:
                 ).select("chunk_id", "structured_text")
             ),
             "What to check (r2): when the input is already at target parallelism —\n"
-            "the shape every byte-split parquet scan has at 100 TB — salt_repartition\n"
-            "'auto' skips the skew shuffle entirely: the kernel branch is\n"
+            "the shape every byte-split parquet scan has at 100 TB — the salt probe\n"
+            "skips the skew shuffle entirely: the kernel branch is\n"
             "scan→Filter→MapInPandas with NO Exchange (contrast with the salted plan\n"
             "above, which keeps the Exchange because its input arrives\n"
             "under-parallel).  Shuffling 100 TB to 'balance' an already-balanced\n"
