@@ -1,11 +1,12 @@
-"""Equivalence gate for the r6 native structured fast paths: single-line
-figure turns and all-tab-line (table) turns must produce byte-identical
-output whether routed through the pure-Catalyst claim or run through the
-pandas kernel (``extract_batch`` called directly on the same rows).
-Adversarial shapes cover the claim-narrowing rules (Java vs Python regex
-line terminators, Unicode digits, overlong dims, captions with tabs) — rows
-the native path must NOT claim still compare equal because the router sends
-them to the kernel."""
+"""Route equality for structured turns: every figure and table shape the
+router sends to the kernel branch (any turn with a tab or ``FIG;mode=``)
+must come out of the Spark plan, across Arrow, byte-identical to pandas
+``extract_batch`` run directly on the same rows.  The adversarial battery
+keeps the shapes an earlier native build of single-line figures and
+all-tab tables had to get right (Java vs Python regex line terminators,
+Unicode digits, overlong dims, captions with tabs, ragged rows, JSON
+escaping), and the plan test pins that every such turn, and only such a
+turn, crosses into Python."""
 
 from __future__ import annotations
 
@@ -71,7 +72,7 @@ def _both_routes(spark, texts, mode, validate=True, emit_raw=True):
     assert_routed_equals_kernel(routed.toPandas(), turns, mode, validate, emit_raw)
 
 
-# deterministic adversarial battery — the narrowing rules, one per row
+# deterministic adversarial battery — one shape per row
 _ADVERSARIAL = [
     "FIG;mode=RGB;w=100;h=200;caption=plain",
     "FIG;mode=OCR;w=100;h=200;caption=scanned",
@@ -96,23 +97,23 @@ _ADVERSARIAL = [
     "only\tone\trow",
     "x\t",
     "\tleading",
-    "cell with FIG;mode= marker\tother",  # tab + FIG substring → kernel
-    "a\tb\nc\td",  # 2-row all-tab table → claimed alive
-    "a\tb\rc",  # \r stays in line; not claimed
-    # multi-line table shapes (claimed) and near-misses (kernel)
+    "cell with FIG;mode= marker\tother",  # tab + FIG substring
+    "a\tb\nc\td",  # 2-row all-tab table → alive
+    "a\tb\rc",  # \r stays in line
+    # multi-line table shapes and near-misses
     "col_0\tcol_1\tcol_2\n12\t\t417\nalpha\t5\tgamma",
     "h1\th2\nr1a\tr1b\nr2a\tr2b\nr3a\tr3b",
     'cell "quoted"\tback\\slash\nv1\tv2',  # JSON escaping in header
     "a\tb\nragged-solo-cell\tx\ty\tz",  # ragged rows NOT padded
     "(cid:123)\tglyph\n1\t2",  # glyph table
-    "a\tb\nno-tab-line\nc\td",  # tab-free middle line → kernel
-    "a\tb\nc\td\n",  # trailing newline → empty last line → kernel
-    "a\tb\n\nc\td",  # empty middle line → kernel
+    "a\tb\nno-tab-line\nc\td",  # tab-free middle line
+    "a\tb\nc\td\n",  # trailing newline → empty last line
+    "a\tb\n\nc\td",  # empty middle line
     "with <!-- schema: {x} --> inside\tb\nc\td",  # schema-marker cell
     "a\tb [[LOWCONF]]\nc\td",  # lowconf marker inside table cells
-    "\t\n\t",  # empty cells only, 2 rows → claimed alive
+    "\t\n\t",  # empty cells only, 2 rows → alive
     "long\t" + "y" * 3000 + "\nnext\trow",  # >2000 chars → truncation
-    "ctl\x07cell\tb\nc\td",  # C0 control in cell → kernel (JSON \\u escape)
+    "ctl\x07cell\tb\nc\td",  # C0 control in cell (JSON \\u escape)
 ]
 
 
@@ -141,42 +142,37 @@ def test_native_struct_fuzz(spark, texts, mode):
     _both_routes(spark, texts, mode)
 
 
-def test_claimed_rows_have_no_python_stage(spark):
-    """The claimed shapes must appear in the plan WITHOUT a MapInPandas on
-    their branch — one MapInPandas total (the kernel branch survives for
-    unclaimed complex rows) — and on a mixed input every row that node is fed
-    contains a tab or a ``FIG;mode=`` marker: the router alone decides which
-    turns cross into Python, so the kernel never sees a prose turn."""
-    import re
-
-    from pyspark.sql import DataFrame
-
-    df = spark.createDataFrame(
-        _frame(["FIG;mode=RGB;w=100;h=200;caption=c", "a\tb"]),
-        schema=TRANSCRIPTS,
-    )
-    plan = extract_blocks(df, n_partitions=1)._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-    )
-    n_mip = len(re.findall(r"^\s*\(\d+\)\s+MapInPandas", plan, re.M))
-    assert n_mip == 1, f"expected exactly 1 MapInPandas, got {n_mip}"
-
-    mixed = spark.createDataFrame(synth_pandas(n_convs=20, turns_per_conv=10, seed=5),
-                                  schema=TRANSCRIPTS)
-    stack = [extract_blocks(mixed)._jdf.queryExecution().optimizedPlan()]
-    mips = []
+def _plan_nodes(plan):
+    stack, nodes = [plan], []
     while stack:
         node = stack.pop()
-        if node.nodeName() == "MapInPandas":
-            mips.append(node)
+        nodes.append(node)
         kids = node.children()
         stack += [kids.apply(i) for i in range(kids.size())]
+    return nodes
+
+
+def test_kernel_gets_exactly_the_structured_turns(spark):
+    """The router's one rule: the single MapInPandas is fed exactly the turns
+    whose text holds a tab or ``FIG;mode=``, and the native branch is a
+    plain Project (no Generate) over the rest."""
+    from pyspark.sql import DataFrame
+
+    turns = synth_pandas(n_convs=20, turns_per_conv=10, seed=5)
+    mixed = spark.createDataFrame(turns, schema=TRANSCRIPTS)
+    nodes = _plan_nodes(extract_blocks(mixed)._jdf.queryExecution().optimizedPlan())
+    mips = [n for n in nodes if n.nodeName() == "MapInPandas"]
     assert len(mips) == 1
+    assert [n.nodeName() for n in nodes if n.nodeName() == "Generate"] == []
+
     kernel_in = DataFrame(
         spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
             spark._jsparkSession, mips[0].child()),
         spark,
-    ).select("text").toPandas().text
-    assert 0 < len(kernel_in) < mixed.count()
-    assert (kernel_in.str.contains("\t", regex=False)
-            | kernel_in.str.contains("FIG;mode=", regex=False)).all()
+    ).select("conv_id", "turn_idx").toPandas()
+    structured = turns[turns.text.str.contains("\t", regex=False)
+                       | turns.text.str.contains("FIG;mode=", regex=False)]
+    assert 0 < len(structured) < len(turns)
+    assert len(kernel_in) == len(structured)
+    assert (set(zip(kernel_in.conv_id, kernel_in.turn_idx))
+            == set(zip(structured.conv_id, structured.turn_idx)))

@@ -244,3 +244,33 @@ def test_run_extraction_commits_once(spark, tmp_path, monkeypatch):
     assert run_extraction(spark, df, out, run_id="clean") == totals
     assert _sidecar_totals(spark, out) == totals
     assert read_extracted(spark, out).count() == n_surviving
+
+
+def test_run_extraction_refuses_an_out_path_with_resume_groups(spark, tmp_path):
+    """A one-shot run into a resumable run's out_path is refused before it
+    writes: its root slice would replace the group directories and leave
+    their records committed over nothing."""
+    df = _transcripts(spark, seed=61)
+    out = str(tmp_path / "groups")
+    run_resumable(spark, df, out, n_groups=2, run_id="groups")
+    want = _chunk_ids(read_extracted(spark, out))
+    with pytest.raises(ValueError, match="overlaps the committed slice"):
+        run_extraction(spark, df, out, run_id="oneshot")
+    assert sorted(completed_groups(out)) == [0, 1]
+    assert _chunk_ids(read_extracted(spark, out)) == want
+
+
+def test_run_resumable_refuses_an_out_path_with_a_one_shot_run(spark, tmp_path):
+    """A resumable run into a one-shot run's out_path is refused before it
+    writes: readers would read the root slice and the group slices
+    together."""
+    df = _transcripts(spark, seed=67)
+    out = str(tmp_path / "oneshot")
+    totals = run_extraction(spark, df, out, run_id="oneshot")
+    with pytest.raises(ValueError, match="overlaps the committed slice"):
+        run_resumable(spark, df, out, n_groups=2, run_id="groups")
+    assert completed_groups(out) == {}
+    got = read_extracted(spark, out)
+    assert got.count() == totals.get("accepted", 0) + totals.get("corrected", 0)
+    assert got.select("chunk_id").distinct().count() == got.count()
+    assert _sidecar_totals(spark, out) == totals

@@ -78,8 +78,10 @@ def main() -> int:
         (
             "Extraction pipeline (hybrid native/kernel, salted kernel branch)",
             fmt(surviving(extract_blocks(t)).select("chunk_id", "structured_text")),
-            "What to check: the native branch is scan→Filter→Project only (whole-stage\n"
-            "codegen, no exchange); the kernel branch shows PushedFilters with the\n"
+            "What to check: one routing rule splits the scan — tab/FIG;mode= turns\n"
+            "take the kernel branch, prose the native one.  The native branch is\n"
+            "scan→Filter→Project only (one whole-stage-codegen Project, no Generate,\n"
+            "no exchange); the kernel branch shows PushedFilters with the\n"
             "StringContains payload predicates reaching the parquet scan, one\n"
             "REPARTITION_BY_NUM exchange (the skew salt), and the single MapInPandas;\n"
             "ReadSchema on the native side is pruned to the 3 needed columns.",
