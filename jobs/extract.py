@@ -20,13 +20,16 @@ import time
 
 
 def main(argv=None) -> int:
+    from sparkx.pipeline import DEFAULT_BUCKETS
+
     p = argparse.ArgumentParser(description="sparkx extraction job")
     p.add_argument("--input", help="transcripts parquet/Iceberg path")
     p.add_argument("--output", required=True)
     p.add_argument("--mode", choices=["fastpath", "agentic"], default="fastpath")
     p.add_argument("--no-validate", action="store_true")
     p.add_argument("--groups", type=int, default=8, help="checkpoint commit groups")
-    p.add_argument("--buckets", type=int, default=32, help="output conv buckets")
+    p.add_argument("--buckets", type=int, default=DEFAULT_BUCKETS,
+                   help="output conv buckets")
     p.add_argument("--run-id", default=None)
     p.add_argument("--master", default=None, help="e.g. local[8]; default from env")
     p.add_argument("--synth-convs", type=int, default=0)

@@ -36,7 +36,9 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from sparkx.pipeline import _ledger_dir, _manifests, commit_slice, extract_blocks
+from sparkx.pipeline import (
+    DEFAULT_BUCKETS, _ledger_dir, _manifests, commit_slice, extract_blocks,
+)
 from sparkx.table_sink import DEFAULT_SINK
 
 
@@ -56,7 +58,7 @@ def run_resumable(
     validate: bool = True,
     run_id: str | None = None,
     n_groups: int = 8,
-    n_buckets: int = 32,
+    n_buckets: int = DEFAULT_BUCKETS,
     fail_after_groups: int | None = None,
     sink=None,
 ) -> dict:

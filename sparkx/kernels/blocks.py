@@ -31,8 +31,8 @@ figure never re-enter the text remainder.
 Every turn goes through this one line grammar; a prose turn is simply a turn
 whose every line lands in the text remainder.  Which turns reach the kernel at
 all is decided once, by the router in :func:`sparkx.pipeline.extract_blocks`:
-prose turns and the single-line structured shapes are built natively there,
-so inside the pipeline every kernel row contains a tab or ``FIG;mode=``.
+only prose turns are built natively there, so inside the pipeline every
+kernel row contains a tab or ``FIG;mode=``.
 """
 
 from __future__ import annotations

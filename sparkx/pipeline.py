@@ -26,10 +26,10 @@ branches of a single plan:
         (one aggregate, then one generator emits each group's three rows);
         then the slice's manifest rename, the commit point
 
-The native branch's expressions name only columns, never a DataFrame, so
-they are built once per JVM and per ``mode, validate, emit_raw`` and reused
-by every job, resume group and stream micro-batch; a call of
-:func:`extract_blocks` only applies them.
+The native branch's ``Project`` is built by each call of
+:func:`extract_blocks` from the kernel's constants
+(``sparkx.kernels.blocks``/``extract``), so the job keeps no per-JVM state
+and each prose rule is stated once.
 
 Stable turn ordering is intrinsic to ``(conv_id, turn_idx, ts, block_rank,
 block_idx)`` — reconstructed by :func:`ordered` at comparison time, never
@@ -41,18 +41,20 @@ from __future__ import annotations
 import functools
 import json
 import os
-import threading
 import time
 import uuid
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark import SparkContext
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
-from sparkx.kernels.extract import OUTPUT_COLUMNS, extract_batch
+from sparkx.kernels.blocks import MIN_TEXT_LEN, RANK_TEXT
+from sparkx.kernels.extract import (
+    FASTPATH_CONF, FASTPATH_NOTES, LOWCONF_CONF, LOWCONF_MARKER, OUTPUT_COLUMNS,
+    TEXT_CONF, TRUNC_STRUCTURED, extract_batch,
+)
 from sparkx.schemas import DROP_STATUSES, EXTRACTED, LINEAGE_COLUMNS, SURVIVING_STATUSES
 from sparkx.table_sink import DEFAULT_SINK
 
@@ -87,58 +89,25 @@ def _kernel(mode: str, validate: bool, cols: list[str],
 _COMPLEX_PRED = "contains(text, '\t') OR contains(text, 'FIG;mode=')"
 
 
-def _once_per_jvm(build):
-    """Memoize ``build`` on its arguments and the live Py4J gateway.  Its
-    Columns are unresolved trees that no session owns, so every job, resume
-    group and stream micro-batch in one JVM shares them; a relaunched JVM (a
-    new gateway) drops them and builds its own."""
-    memo = {"gateway": None}
-    lock = threading.Lock()  # stream micro-batches call in from Py4J threads
-
-    @functools.wraps(build)
-    def memoized(*key):
-        with lock:
-            if memo["gateway"] is not SparkContext._gateway:
-                memo.clear()
-                memo["gateway"] = SparkContext._gateway
-            if key not in memo:
-                memo[key] = build(*key)
-            return memo[key]
-
-    return memoized
-
-
 def _native_routed_blocks(df: DataFrame, mode: str, validate: bool,
                           emit_raw: bool) -> DataFrame:
     """The block of every prose turn (no tab, no ``FIG;mode=``) in one
     whole-stage-codegen ``Project``: a prose turn is exactly one text block,
     its whole text being the remainder, so no ``Generate`` is needed.
-    Semantics are byte-identical to the pandas kernel on prose; the
-    oracle-equality and native fuzz suites compare the two.
-
-    The block's field expressions are built once per JVM
-    (:func:`_native_exprs`); each call only applies them to ``df``."""
-    return df.select(
-        "conv_id", F.col("turn_idx").cast("int").alias("turn_idx"),
-        "role", "tool", "ts", *_native_exprs(mode, validate, emit_raw),
-    )
-
-
-@_once_per_jvm
-def _native_exprs(mode: str, validate: bool, emit_raw: bool) -> tuple[Column, ...]:
-    """The prose block's fields over ``text``; they name columns, never a
-    DataFrame."""
+    Semantics are byte-identical to the pandas kernel on prose, whose
+    constants state each rule; the oracle-equality and native fuzz suites
+    compare the two."""
     raw = F.coalesce(F.col("text"), F.lit(""))
-    alive = py_stripped_len(raw) >= 40  # parser.py:32,125 (Python strip set)
+    alive = py_stripped_len(raw) >= MIN_TEXT_LEN  # parser.py:32,125 (Python strip set)
     if mode == "fastpath":
-        conf = F.lit(0.8)
-        notes = F.lit("Extracted via direct MLX agents (no crew orchestration)")
+        conf = F.lit(FASTPATH_CONF)
+        notes = F.lit(FASTPATH_NOTES)
         retried = F.lit(False)
     else:  # agentic: text defaults + lowconf retry hook (extraction.py:125)
-        lowconf = F.contains(raw, F.lit("[[LOWCONF]]"))
-        conf = F.when(lowconf, F.lit(0.4)).otherwise(F.lit(0.7))
+        lowconf = F.contains(raw, F.lit(LOWCONF_MARKER))
+        conf = F.when(lowconf, F.lit(LOWCONF_CONF)).otherwise(F.lit(TEXT_CONF))
         notes = F.lit("")
-        retried = lowconf  # conf 0.4 < 0.5 threshold (base.py:42)
+        retried = lowconf  # LOWCONF_CONF < CONFIDENCE_THRESHOLD (base.py:42)
     empty_arr = F.array().cast("array<string>")
     if validate:
         # containment holds by construction for text; dropped blocks never
@@ -148,12 +117,14 @@ def _native_exprs(mode: str, validate: bool, emit_raw: bool) -> tuple[Column, ..
     else:
         valid = (F.lit(None).cast("boolean"), F.lit(None).cast("array<string>"),
                  F.lit(None).cast("double"), F.lit(None).cast("string"))
-    return (
+    return df.select(
+        "conv_id", F.col("turn_idx").cast("int").alias("turn_idx"),
+        "role", "tool", "ts",
         F.lit("text").alias("chunk_type"),
-        F.lit(2).cast("int").alias("block_rank"),
+        F.lit(RANK_TEXT).cast("int").alias("block_rank"),
         F.lit(0).cast("int").alias("block_idx"),
         *([raw.alias("raw_content")] if emit_raw else []),
-        F.when(alive, F.substring(raw, 1, 2000)).otherwise(F.lit(""))
+        F.when(alive, F.substring(raw, 1, TRUNC_STRUCTURED)).otherwise(F.lit(""))
         .alias("structured_text"),
         F.lit("").alias("intuition_summary"),
         empty_arr.alias("key_concepts"),
@@ -165,7 +136,7 @@ def _native_exprs(mode: str, validate: bool, emit_raw: bool) -> tuple[Column, ..
         valid[2].alias("verdict_score"),
         valid[3].alias("validator_notes"),
         F.lit(False).alias("was_corrected"),
-        # accept floor: every alive conf here is >= 0.25 -> accepted
+        # accept floor: every alive conf here is >= ACCEPT_FLOOR -> accepted
         F.when(alive, F.lit("accepted")).otherwise(F.lit("dropped_short")).alias("status"),
     )
 

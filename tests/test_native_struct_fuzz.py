@@ -6,9 +6,14 @@ keeps the shapes an earlier native build of single-line figures and
 all-tab tables had to get right (Java vs Python regex line terminators,
 Unicode digits, overlong dims, captions with tabs, ragged rows, JSON
 escaping), and the plan test pins that every such turn, and only such a
-turn, crosses into Python."""
+turn, crosses into Python.  Every ``(mode, validate, emit_raw)`` combination
+is compared on a mix of prose and structured turns, and a warm
+``extract_blocks`` call is bounded in Py4J round trips."""
 
 from __future__ import annotations
+
+import itertools
+import threading
 
 import pandas as pd
 import pytest
@@ -125,6 +130,57 @@ def test_native_struct_adversarial(spark, mode, validate):
 
 def test_native_struct_emit_raw_false(spark):
     _both_routes(spark, _ADVERSARIAL, "fastpath", emit_raw=False)
+
+
+def _mixed_turns() -> pd.DataFrame:
+    return pd.concat(
+        [_frame(_ADVERSARIAL), synth_pandas(n_convs=6, turns_per_conv=8, seed=11)],
+        ignore_index=True,
+    )
+
+
+@pytest.mark.parametrize(
+    "mode,validate,emit_raw",
+    list(itertools.product(["fastpath", "agentic"], [True, False], [True, False])),
+)
+def test_every_combination_equals_kernel(spark, mode, validate, emit_raw):
+    """Each ``(mode, validate, emit_raw)`` combination, on prose and
+    structured turns together, equals the pandas kernel on the same turns:
+    the only route-equality check of native prose with ``validate=False`` or
+    ``emit_raw=False``."""
+    turns = _mixed_turns()
+    df = spark.createDataFrame(turns, schema=TRANSCRIPTS)
+    routed = extract_blocks(df, mode=mode, validate=validate, emit_raw=emit_raw,
+                            n_partitions=1).toPandas()
+    assert ("raw_content" in routed.columns) == emit_raw
+    assert_routed_equals_kernel(routed, turns, mode, validate, emit_raw)
+
+
+def test_warm_extract_blocks_crosses_py4j_rarely(spark):
+    """Counted, not timed: a warm ``extract_blocks`` call builds the native
+    prose ``Project`` and applies it in well under 1,000 Py4J round trips
+    (737 on these turns; a memoized build took ~320), so a native Column
+    tree that grows back fails here.  Only the calling thread's commands count: Py4J's
+    finalizer thread sends the deletes of earlier calls' garbage through the
+    same client whenever it drains its queue."""
+    extract_blocks(spark.createDataFrame(_mixed_turns(), schema=TRANSCRIPTS))  # warm-up
+    df = spark.createDataFrame(_mixed_turns(), schema=TRANSCRIPTS)
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    trips = 0
+    caller = threading.current_thread()
+
+    def counting(*args, **kwargs):
+        nonlocal trips
+        trips += threading.current_thread() is caller
+        return send(*args, **kwargs)
+
+    client.send_command = counting
+    try:
+        extract_blocks(df)
+    finally:
+        client.send_command = send
+    assert 0 < trips < 1000, f"{trips} Py4J round trips for one warm extract_blocks"
 
 
 @settings(

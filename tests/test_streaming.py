@@ -100,9 +100,10 @@ def test_sink_replay_is_idempotent(spark, tmp_path):
 
 
 def test_stream_restart_identity_guard(spark, tmp_path):
-    """A committed stream out_path refuses (a) a different checkpoint dir —
-    fresh checkpoints re-number batches from 0 over committed batch dirs —
-    and (b) a restart whose checkpoint was lost."""
+    """A committed stream out_path refuses (a) a different checkpoint dir
+    (a fresh checkpoint re-numbers batches from 0 over committed batch
+    dirs), (b) the same checkpoint under a different mode, and (c) a restart
+    whose checkpoint was lost."""
     import shutil
 
     import pytest
@@ -114,6 +115,8 @@ def test_stream_restart_identity_guard(spark, tmp_path):
 
     with pytest.raises(ValueError, match="committed under"):
         start_extraction_stream(spark, str(in_dir), out, str(tmp_path / "ckpt2"))
+    with pytest.raises(ValueError, match="committed under"):
+        start_extraction_stream(spark, str(in_dir), out, ckpt, mode="agentic")
     shutil.rmtree(ckpt)
     with pytest.raises(ValueError, match="is gone"):
         start_extraction_stream(spark, str(in_dir), out, ckpt)
