@@ -20,16 +20,12 @@ import time
 
 
 def main(argv=None) -> int:
-    from sparkx.pipeline import DEFAULT_BUCKETS
-
     p = argparse.ArgumentParser(description="sparkx extraction job")
     p.add_argument("--input", help="transcripts parquet/Iceberg path")
     p.add_argument("--output", required=True)
     p.add_argument("--mode", choices=["fastpath", "agentic"], default="fastpath")
     p.add_argument("--no-validate", action="store_true")
     p.add_argument("--groups", type=int, default=8, help="checkpoint commit groups")
-    p.add_argument("--buckets", type=int, default=DEFAULT_BUCKETS,
-                   help="output conv buckets")
     p.add_argument("--run-id", default=None)
     p.add_argument("--master", default=None, help="e.g. local[8]; default from env")
     p.add_argument("--synth-convs", type=int, default=0)
@@ -63,7 +59,6 @@ def main(argv=None) -> int:
             validate=not args.no_validate,
             run_id=args.run_id,
             n_groups=args.groups,
-            n_buckets=args.buckets,
             fail_after_groups=args.fail_after_groups,
         )
         wall = time.time() - t0

@@ -20,6 +20,8 @@ implemented format-agnostically:
   group overwrites both of its slices, so survivors and metrics are each
   committed exactly once (deterministic ``chunk_id`` = sha2 of
   ``conv_id|turn_idx|type|idx``, so re-extraction produces identical rows).
+* A resume under other ``mode``/``validate``/``n_groups`` is refused by the
+  one ledger rule, :func:`sparkx.pipeline.check_ledger`.
 * Snapshot reads: :func:`read_extracted` reads only the slices that a
   manifest names, so a group killed between its survivors write and its
   manifest rename is invisible to readers until it is redone.
@@ -37,9 +39,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sparkx.pipeline import (
-    DEFAULT_BUCKETS, _ledger_dir, _manifests, commit_slice, extract_blocks,
+    _ledger_dir, _manifests, check_ledger, commit_slice, extract_blocks,
 )
 from sparkx.table_sink import DEFAULT_SINK
+
+GROUP_SLICE = "commit_group="
 
 
 class SimulatedFailure(RuntimeError):
@@ -47,7 +51,9 @@ class SimulatedFailure(RuntimeError):
 
 
 def completed_groups(out_path: str) -> dict[int, dict]:
-    return {int(m["group"]): m for m in _manifests(out_path) if "group" in m}
+    """Committed group manifests by ``g`` of their ``commit_group=<g>`` slice."""
+    return {int(m["slice"].removeprefix(GROUP_SLICE)): m
+            for m in _manifests(out_path) if m["slice"].startswith(GROUP_SLICE)}
 
 
 def run_resumable(
@@ -58,7 +64,6 @@ def run_resumable(
     validate: bool = True,
     run_id: str | None = None,
     n_groups: int = 8,
-    n_buckets: int = DEFAULT_BUCKETS,
     fail_after_groups: int | None = None,
     sink=None,
 ) -> dict:
@@ -71,22 +76,12 @@ def run_resumable(
     snapshot — the JSON manifest then merely mirrors snapshot metadata."""
     sink = sink or DEFAULT_SINK
     run_id = run_id or f"run_{int(time.time())}"
-    done = completed_groups(out_path)
-    # Fail fast on parameter drift: group membership is a function of
-    # n_groups (pmod(xxhash64(conv_id), n_groups)), so resuming a ledger
-    # written under different n_groups would silently drop/duplicate
-    # conversations; a mode/validate change would mix incompatible outputs,
-    # and n_buckets shapes committed output too (conv_bucket values).
-    params = {"mode": mode, "validate": validate, "n_buckets": n_buckets}
+    # n_groups sets group membership, so it is recorded; checked up front so
+    # that a drifted run fails even when no group is left to commit
+    params = {"mode": mode, "validate": validate}
     recorded = {**params, "n_groups": n_groups}
-    for g, m in done.items():
-        prev = {k: m.get(k) for k in recorded}
-        if prev != recorded:
-            raise ValueError(
-                f"ledger group {g} was committed with {prev}, but this run "
-                f"uses {recorded}; resume with the original parameters or use "
-                f"a fresh out_path"
-            )
+    check_ledger(out_path, None, recorded)
+    done = completed_groups(out_path)
     group_col = F.pmod(F.xxhash64("conv_id"), F.lit(n_groups)).cast("int")
 
     executed = 0
@@ -97,8 +92,7 @@ def run_resumable(
             transcripts.filter(group_col == g), run_id=run_id,
             src_snapshot_id=f"group_{g}", **params,
         )
-        commit_slice(blocks, out_path, f"commit_group={g}", run_id, sink,
-                     {**recorded, "group": g})
+        commit_slice(blocks, out_path, f"{GROUP_SLICE}{g}", run_id, sink, recorded)
         executed += 1
         if fail_after_groups is not None and executed >= fail_after_groups:
             raise SimulatedFailure(f"injected failure after {executed} groups")

@@ -148,7 +148,6 @@ def extract_blocks(
     run_id: str = "run_0",
     src_snapshot_id: str = "",
     n_partitions: int | None = None,
-    n_buckets: int = DEFAULT_BUCKETS,
     emit_raw: bool = True,
 ) -> DataFrame:
     """All candidate blocks (surviving + dropped) with lineage columns.
@@ -219,7 +218,7 @@ def extract_blocks(
         .withColumn("src_snapshot_id", F.lit(src_snapshot_id))
         .withColumn("partition_id", F.spark_partition_id())
         .withColumn(
-            "conv_bucket", F.pmod(F.xxhash64("conv_id"), F.lit(n_buckets)).cast("int")
+            "conv_bucket", F.pmod(F.xxhash64("conv_id"), F.lit(DEFAULT_BUCKETS)).cast("int")
         )
         .select(*[f.name for f in EXTRACTED.fields if emit_raw or f.name != "raw_content"],
                 *LINEAGE_COLUMNS)
@@ -306,14 +305,6 @@ def _manifest_path(out_path: str, slice_name: str) -> str:
     return os.path.join(_ledger_dir(out_path), f"{name}.json")
 
 
-def _commit_manifest(path: str, manifest: dict) -> None:
-    os.makedirs(os.path.dirname(path), exist_ok=True)
-    tmp = os.path.join(os.path.dirname(path), f".tmp_{uuid.uuid4().hex}")
-    with open(tmp, "w") as f:
-        json.dump(manifest, f, indent=1)
-    os.replace(tmp, path)  # atomic — this IS the snapshot commit
-
-
 def _manifests(out_path: str) -> list[dict]:
     """Every slice manifest committed under ``out_path``."""
     led = _ledger_dir(out_path)
@@ -323,15 +314,40 @@ def _manifests(out_path: str) -> list[dict]:
     for name in os.listdir(led):
         if name.endswith(".json"):
             with open(os.path.join(led, name)) as f:
-                m = json.load(f)
-            if "slice" in m:
-                found.append(m)
+                found.append(json.load(f))
     return found
 
 
 def _overlaps(a: str, b: str) -> bool:
     """Two different slices whose directories nest (``""`` is the root)."""
     return a != b and (not a or not b or a.startswith(b + "/") or b.startswith(a + "/"))
+
+
+def check_ledger(out_path: str, slice_name: str | None, params: dict) -> list[dict]:
+    """The ledger rule: every committed slice of ``out_path`` records the
+    same ``params`` and none overlaps ``slice_name`` (``None``: named slices
+    not chosen yet, which only the root overlaps).  Raises ``ValueError``
+    before any write; the slice's own manifest is exempt, so a re-run
+    replaces it.  Returns the committed manifests."""
+    found = _manifests(out_path)
+    for m in found:
+        other = m["slice"]
+        if other == slice_name:
+            continue
+        if (other == "") if slice_name is None else _overlaps(other, slice_name):
+            new = "this run" if slice_name is None else f"slice {slice_name!r}"
+            raise ValueError(
+                f"{new} overlaps the committed slice {other!r} under "
+                f"{out_path}; use a fresh out_path"
+            )
+        prev = {k: m.get(k) for k in params}
+        if prev != params:
+            raise ValueError(
+                f"slice {other!r} under {out_path} was committed with {prev}, "
+                f"but this run uses {params}; re-run with the original "
+                f"parameters or use a fresh out_path"
+            )
+    return found
 
 
 def commit_slice(
@@ -349,19 +365,11 @@ def commit_slice(
     The manifest holds ``slice``, ``run_id``, ``committed_at``,
     ``status_counts`` (from an ``Observation`` on the survivors write: two
     write actions, no collect), ``n_surviving`` and the caller's ``params``
-    (the extraction parameters, plus ``group``/``n_groups`` for a resume
-    group).
-
-    A slice that overlaps a different committed slice of ``out_path`` is
-    refused with ``ValueError`` before any write: the unnamed one-shot slice
-    ``""`` overlaps every named one, so a one-shot output and a resumable or
-    stream output cannot share an ``out_path``."""
-    for m in _manifests(out_path):
-        if _overlaps(m["slice"], slice_name):
-            raise ValueError(
-                f"slice {slice_name!r} overlaps the committed slice "
-                f"{m['slice']!r} under {out_path}; use a fresh out_path"
-            )
+    (``mode`` and ``validate``, plus ``n_groups`` for a resume group and
+    ``checkpoint_dir`` for a stream batch), which :func:`check_ledger`
+    holds equal across the slices of ``out_path``, so one ``out_path`` holds
+    one kind of run."""
+    check_ledger(out_path, slice_name, params)
     manifest_path = _manifest_path(out_path, slice_name)
     if os.path.exists(manifest_path):
         os.remove(manifest_path)
@@ -391,7 +399,11 @@ def commit_slice(
         "n_surviving": sum(status_counts.get(s, 0) for s in SURVIVING_STATUSES),
         **params,
     }
-    _commit_manifest(manifest_path, manifest)
+    tmp = os.path.join(_ledger_dir(out_path), f".tmp_{uuid.uuid4().hex}")
+    os.makedirs(_ledger_dir(out_path), exist_ok=True)
+    with open(tmp, "w") as f:
+        json.dump(manifest, f, indent=1)
+    os.replace(tmp, manifest_path)  # atomic — this IS the snapshot commit
     return manifest
 
 
@@ -403,7 +415,6 @@ def run_extraction(
     validate: bool = True,
     run_id: str = "run_0",
     src_snapshot_id: str = "",
-    n_buckets: int = DEFAULT_BUCKETS,
 ) -> dict:
     """One-shot (non-resumable) run, returning block totals by status.  It
     commits through the one commit function, :func:`commit_slice`, with an
@@ -412,11 +423,8 @@ def run_extraction(
     the manifest in ``<out>/_ledger/root.json``.  A re-run into the same
     ``out_path`` uncommits the old output first and replaces it, so a re-run
     killed between its two overwrites leaves nothing committed.  For
-    checkpointed runs use sparkx.checkpoint.run_resumable, which commits
-    each group through the same function to ``extracted/commit_group=<g>/``
-    and ``metrics/commit_group=<g>/``; the two cannot share an
-    ``out_path``."""
-    params = {"mode": mode, "validate": validate, "n_buckets": n_buckets}
+    checkpointed runs use :func:`sparkx.checkpoint.run_resumable`."""
+    params = {"mode": mode, "validate": validate}
     blocks = extract_blocks(
         transcripts, run_id=run_id, src_snapshot_id=src_snapshot_id, **params
     )

@@ -23,25 +23,21 @@ Design:
   overwrite — a batch replayed after a mid-commit failure first removes its
   manifest, then rewrites the same directories instead of appending
   duplicates, and commits again (the batch ledger's
-  overwrite-then-manifest commit).
+  overwrite-then-manifest commit);
+* batch ids mean something only under ONE checkpoint, so each batch records
+  its ``checkpoint_dir`` and the ledger rule (:func:`sparkx.pipeline.check_ledger`)
+  refuses a restart under another checkpoint or mode.
 """
 
 from __future__ import annotations
 
-import json
 import os
 import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
-from sparkx.pipeline import (
-    DEFAULT_BUCKETS,
-    _commit_manifest,
-    _ledger_dir,
-    commit_slice,
-    extract_blocks,
-)
+from sparkx.pipeline import check_ledger, commit_slice, extract_blocks
 from sparkx.schemas import TRANSCRIPTS
 from sparkx.table_sink import DEFAULT_SINK
 
@@ -67,12 +63,18 @@ def start_extraction_stream(
     """Start (or resume, via checkpoint_dir) the incremental extraction
     stream.  Returns the StreamingQuery."""
     run_id = run_id or f"stream_{uuid.uuid4().hex[:8]}"
-    _guard_stream_identity(out_path, checkpoint_dir, mode)
+    committed = check_ledger(out_path, None, _batch_params(checkpoint_dir, mode))
+    if committed and not os.path.isdir(checkpoint_dir):
+        raise ValueError(
+            f"stream output {out_path} has committed batches but its checkpoint "
+            f"{checkpoint_dir} is gone; restarting would re-slice batch ids from "
+            f"0 over committed data — use a fresh out_path"
+        )
     transcripts = stream_transcripts(spark, in_dir)
 
     writer = (
         transcripts.writeStream.outputMode("append")
-        .foreachBatch(make_batch_sink(out_path, mode=mode, run_id=run_id))
+        .foreachBatch(make_batch_sink(out_path, checkpoint_dir, mode, run_id))
         .option("checkpointLocation", checkpoint_dir)
     )
     if available_now:
@@ -80,39 +82,14 @@ def start_extraction_stream(
     return writer.start()
 
 
-def _guard_stream_identity(out_path: str, checkpoint_dir: str, mode: str) -> None:
-    """Fail fast when a stream restarts against an out_path it did not
-    commit: batch ids are meaningful only relative to ONE checkpoint's
-    file-to-batch slicing, so pointing a FRESH checkpoint at a directory
-    with committed ``batch_id=`` output would re-number batches from 0 and
-    overwrite differently-sliced data (the streaming analog of the batch
-    ledger's parameter-drift guard in sparkx.checkpoint)."""
-    meta_path = os.path.join(_ledger_dir(out_path), "stream_meta.json")
-    params = {
-        "checkpoint_dir": os.path.abspath(checkpoint_dir),
-        "mode": mode,
-    }
-    if os.path.exists(meta_path):
-        with open(meta_path) as f:
-            prev = json.load(f)
-        if {k: prev.get(k) for k in params} != params:
-            raise ValueError(
-                f"stream output {out_path} was committed under {prev}, but this "
-                f"start uses {params}; reuse the original checkpoint dir (and "
-                f"mode) or write to a fresh out_path"
-            )
-        if not os.path.isdir(params["checkpoint_dir"]):
-            raise ValueError(
-                f"stream output {out_path} has committed batches but its "
-                f"checkpoint {params['checkpoint_dir']} is gone; restarting "
-                f"would re-slice batch ids from 0 over committed data — use a "
-                f"fresh out_path"
-            )
-        return
-    _commit_manifest(meta_path, params)
+def _batch_params(checkpoint_dir: str, mode: str) -> dict:
+    """The parameters every stream batch's manifest records."""
+    return {"mode": mode, "validate": True,
+            "checkpoint_dir": os.path.abspath(checkpoint_dir)}
 
 
-def make_batch_sink(out_path: str, mode: str = "fastpath", run_id: str = "stream"):
+def make_batch_sink(out_path: str, checkpoint_dir: str, mode: str = "fastpath",
+                    run_id: str = "stream"):
     """foreachBatch sink: extract → :func:`commit_slice` of the
     ``stream/batch_id=<id>`` slice, which ends with the batch's manifest.
 
@@ -122,12 +99,12 @@ def make_batch_sink(out_path: str, mode: str = "fastpath", run_id: str = "stream
     failure window parquet append could not cover.  A micro-batch of a few
     small files is under-parallel, so ``extract_blocks`` salts its kernel
     branch.  Module-level so tests can drive a replay directly."""
-    params = {"mode": mode, "validate": True, "n_buckets": DEFAULT_BUCKETS}
+    params = _batch_params(checkpoint_dir, mode)
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
         blocks = extract_blocks(
-            batch_df, run_id=run_id, src_snapshot_id=f"microbatch_{batch_id}",
-            **params,
+            batch_df, mode=mode, run_id=run_id,
+            src_snapshot_id=f"microbatch_{batch_id}",
         )
         commit_slice(blocks, out_path, f"stream/batch_id={batch_id}", run_id,
                      DEFAULT_SINK, params)

@@ -144,25 +144,26 @@ def test_resume_rejects_parameter_drift(spark, tmp_path):
         dict(n_groups=8),
         dict(n_groups=4, mode="agentic"),
         dict(n_groups=4, validate=False),
-        # ADVICE r2: n_buckets shapes committed output (conv_bucket layout)
-        dict(n_groups=4, n_buckets=64),
     ):
         with pytest.raises(ValueError, match="committed with"):
             run_resumable(spark, df, out, **bad)
     # original parameters still resume fine
     summary = run_resumable(spark, df, out, n_groups=4)
     assert len(summary["ledger"]) == 4
+    # a complete ledger leaves no group to commit, and still refuses a drift
+    # before any Spark work
+    with pytest.raises(ValueError, match="committed with"):
+        run_resumable(None, None, out, n_groups=4, mode="agentic")
 
 
 def test_resume_rejects_a_record_missing_a_parameter(tmp_path):
     """Every group record carries every parameter, so one without
-    ``n_buckets`` cannot be shown to match this run and is refused (before
+    ``validate`` cannot be shown to match this run and is refused (before
     any Spark work)."""
     led = tmp_path / "_ledger"
     led.mkdir()
     (led / "commit_group_0.json").write_text(json.dumps({
-        "slice": "commit_group=0", "group": 0, "n_groups": 2,
-        "mode": "fastpath", "validate": True,
+        "slice": "commit_group=0", "n_groups": 2, "mode": "fastpath",
     }))
     with pytest.raises(ValueError, match="committed with"):
         run_resumable(None, None, str(tmp_path), n_groups=2)

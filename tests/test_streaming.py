@@ -3,9 +3,15 @@ checkpointed resume, output identical to the batch pipeline."""
 
 from __future__ import annotations
 
+import json
 import os
+from pathlib import Path
 
-from sparkx.streaming import start_extraction_stream
+import pytest
+
+from sparkx.checkpoint import read_extracted, run_resumable
+from sparkx.schemas import TRANSCRIPTS
+from sparkx.streaming import make_batch_sink, start_extraction_stream
 from sparkx.synth import synth_pandas, write_transcripts_parquet
 
 
@@ -25,7 +31,6 @@ def test_stream_matches_batch(spark, tmp_path):
     import pandas as pd
 
     from sparkx.pipeline import extract_blocks, surviving
-    from sparkx.schemas import TRANSCRIPTS
 
     in_dir, frames = _write_input_files(tmp_path)
     out = tmp_path / "stream_out"
@@ -58,17 +63,12 @@ def test_sink_replay_is_idempotent(spark, tmp_path):
     """ADVICE r1: a micro-batch retried after the data write but before the
     streaming-checkpoint commit must NOT duplicate rows — the batch-keyed
     overwrite sink rewrites its own survivors and metrics slices on replay."""
-    import json
-
-    from sparkx.checkpoint import read_extracted
     from sparkx.pipeline import extract_blocks
-    from sparkx.schemas import TRANSCRIPTS
-    from sparkx.streaming import make_batch_sink
 
     pdf = synth_pandas(n_convs=5, turns_per_conv=4, seed=81)
     batch = spark.createDataFrame(pdf, TRANSCRIPTS)
     out = str(tmp_path / "replay_out")
-    sink = make_batch_sink(out, mode="fastpath", run_id="replay")
+    sink = make_batch_sink(out, str(tmp_path / "ckpt"), mode="fastpath", run_id="replay")
 
     def manifests():
         led = tmp_path / "replay_out" / "_ledger"
@@ -106,16 +106,14 @@ def test_stream_restart_identity_guard(spark, tmp_path):
     whose checkpoint was lost."""
     import shutil
 
-    import pytest
-
     in_dir, _ = _write_input_files(tmp_path, n_files=1, seed0=90)
     out, ckpt = str(tmp_path / "gout"), str(tmp_path / "gckpt")
     q = start_extraction_stream(spark, str(in_dir), out, ckpt, available_now=True)
     q.awaitTermination(120)
 
-    with pytest.raises(ValueError, match="committed under"):
+    with pytest.raises(ValueError, match="committed with"):
         start_extraction_stream(spark, str(in_dir), out, str(tmp_path / "ckpt2"))
-    with pytest.raises(ValueError, match="committed under"):
+    with pytest.raises(ValueError, match="committed with"):
         start_extraction_stream(spark, str(in_dir), out, ckpt, mode="agentic")
     shutil.rmtree(ckpt)
     with pytest.raises(ValueError, match="is gone"):
@@ -142,3 +140,56 @@ def test_stream_resume_processes_only_new_files(spark, tmp_path):
     assert len(got) > n1
     assert got.chunk_id.is_unique, "resume reprocessed already-committed files"
     assert got.conv_id.str.endswith("_new").sum() > 0
+
+
+def test_stream_that_committed_nothing_restarts_under_a_fresh_checkpoint(spark, tmp_path):
+    """A start over an empty input commits no batch, so there is nothing a
+    fresh checkpoint could re-slice: the restart under it goes ahead."""
+    in_dir = tmp_path / "stream_in"
+    in_dir.mkdir()
+    out = str(tmp_path / "out")
+    q = start_extraction_stream(spark, str(in_dir), out, str(tmp_path / "ckpt1"))
+    q.awaitTermination(120)
+    assert not os.path.isdir(os.path.join(out, "_ledger"))
+
+    pdf = synth_pandas(n_convs=4, turns_per_conv=5, seed=97)
+    write_transcripts_parquet(pdf, str(in_dir / "part_0.parquet"))
+    q = start_extraction_stream(spark, str(in_dir), out, str(tmp_path / "ckpt2"))
+    q.awaitTermination(120)
+    assert q.exception() is None
+    got = read_extracted(spark, out).toPandas()
+    assert len(got) and got.chunk_id.is_unique
+
+
+def _committed(spark, out):
+    """The ledger's records and the chunk ids a reader sees."""
+    records = {p.name: json.loads(p.read_text())
+               for p in sorted(Path(out, "_ledger").glob("*.json"))}
+    return records, sorted(r.chunk_id for r in read_extracted(spark, out).collect())
+
+
+def test_stream_refuses_an_out_path_with_resume_groups(spark, tmp_path):
+    """Resume groups and stream batches never overlap as paths, but they
+    record different parameters, so a stream into a resumable run's
+    out_path is refused before it starts."""
+    in_dir, frames = _write_input_files(tmp_path, n_files=1, seed0=95)
+    out = str(tmp_path / "groups")
+    run_resumable(spark, spark.createDataFrame(frames[0], TRANSCRIPTS), out,
+                  n_groups=2, run_id="groups")
+    before = _committed(spark, out)
+    with pytest.raises(ValueError, match="committed with"):
+        start_extraction_stream(spark, str(in_dir), out, str(tmp_path / "ckpt"))
+    assert _committed(spark, out) == before
+
+
+def test_resume_refuses_an_out_path_with_stream_batches(spark, tmp_path):
+    """The reverse order: a resumable run into a stream's out_path is
+    refused before it writes."""
+    pdf = synth_pandas(n_convs=5, turns_per_conv=4, seed=96)
+    batch = spark.createDataFrame(pdf, TRANSCRIPTS)
+    out = str(tmp_path / "stream")
+    make_batch_sink(out, str(tmp_path / "ckpt"))(batch, 0)
+    before = _committed(spark, out)
+    with pytest.raises(ValueError, match="committed with"):
+        run_resumable(spark, batch, out, n_groups=2, run_id="groups")
+    assert _committed(spark, out) == before

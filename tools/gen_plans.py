@@ -7,8 +7,10 @@ from __future__ import annotations
 
 import re
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 
 
@@ -1327,7 +1329,7 @@ def main() -> int:
         )
     )
 
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(ROOT / "PLANS.md", "w") as f:
         f.write(
             "# PLANS — physical plan audit (explain formatted)\n\n"
             "Generated from the live engine at sf0.001 (`python tools/gen_plans.py`).\n"
